@@ -1,26 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Partition-count sensitivity knob (round-12 verdict item #4): the
     // cheap local proxy for cluster-scale partition counts — shuffle
     // partitions >> cpus exposes summation-order / tie-break
     // nondeterminism that 32-partition runs never sample. The driver
     // sets no env, so its gate keeps partitions = cpus.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").fold(cpus)(_.toInt)
+    val spark = Sessions.local(cpus, shufflePartitions, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (same contract as Bench): the driver sets
     // no env and always dumps the full surface.

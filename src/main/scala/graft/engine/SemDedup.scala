@@ -115,20 +115,24 @@ object SemDedup {
     // evaluates, and the CentroidRound grid absorbs partial-merge-order
     // float noise exactly as the module contract documents (the oracle
     // recomputes the same rounded avg independently).
-    val dim = corpus.select(size(col("v"))).head().getInt(0)
-    var cents = seeds
-    var it = 0
-    while (it < iters) {
-      val sums = (0 until dim).map(i =>
-        sum(element_at(col("v"), i + 1)).as(s"__s$i"))
-      cents = assignTo(cents)
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("__n"), sums: _*)
-        .select(col("cell"), array((0 until dim).map(i =>
-          round(col(s"__s$i") / col("__n"), CentroidRound)): _*).as("cv"))
-      it += 1
+    // An empty corpus has no dimension to average over: its assignment
+    // to the (empty) seeds is the empty result.
+    corpus.select(size(col("v"))).head(1).headOption.fold(assignTo(seeds)) { r =>
+      val dim = r.getInt(0)
+      var cents = seeds
+      var it = 0
+      while (it < iters) {
+        val sums = (0 until dim).map(i =>
+          sum(element_at(col("v"), i + 1)).as(s"__s$i"))
+        cents = assignTo(cents)
+          .groupBy(col("cell"))
+          .agg(count(lit(1)).as("__n"), sums: _*)
+          .select(col("cell"), array((0 until dim).map(i =>
+            round(col(s"__s$i") / col("__n"), CentroidRound)): _*).as("cv"))
+        it += 1
+      }
+      assignTo(cents)
     }
-    assignTo(cents)
   }
 
   /** Graded key: (vec_id, cell, rep, pruned) for the whole planted

@@ -107,8 +107,8 @@ object GraftSql {
     graft.engine.Tables.names.foreach(createView(spark, dir, _))
 }
 
-/** Builder-time injection: `SparkSession.builder.withExtensions(new
-  * GraftExtensions)` or `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+/** Builder-time injection: `withExtensions(new GraftExtensions)` on a session
+  * builder, or `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Runnable end-to-end dedup pipeline — the reference topology, Spark-first:
   *
@@ -18,12 +18,9 @@ object StreamMain {
     require(args.length >= 3, "usage: StreamMain <eventsDir> <outDir> <checkpointDir> [delay]")
     val Array(in, out, ckpt) = args.take(3)
     val delay = if (args.length > 3) args(3) else "1 hour"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-dedup-stream")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Sessions.create(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus.toInt,
+      Seq("spark.app.name" -> "graft-dedup-stream"))
     Streams.sessionConf(spark)
     val events = Streams.events(spark, Streams.FileStreamSource(in))
     val deduped = Streams.dedupWithinWatermark(events, delay, Seq("event_id"))

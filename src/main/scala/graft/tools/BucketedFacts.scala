@@ -21,18 +21,15 @@ import graft.engine.Tables
   *
   * Run: BUCKET_SRC (default target/mirror_x970), BUCKET_N (default 64).
   * Emits one JSON line per phase; cleans up the bucketed tables after.
+  * Heap is the launching JVM's -Xmx: in local mode
+  * `spark.driver.memory` only takes effect before the driver JVM starts,
+  * so the session sets none.
   */
 object BucketedFacts {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("BUCKET_SRC", "target/mirror_x970")
     val buckets = sys.env.getOrElse("BUCKET_N", "64").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "48g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32, 64)
     Tables.configure(spark)
     ScaleSmoke.ensureSpillListener(spark)
 
@@ -69,7 +66,7 @@ object BucketedFacts {
     val (base, baseWall) = measure("q3_parquet_x970") {
       q3(Tables.lineitem(spark, src), Tables.orders(spark, src), Tables.customer(spark, src))
     }
-    val basePlan = ScaleSmoke.planFlags(
+    val basePlan = PlanDump.planFlags(
       q3Plan(spark, Tables.lineitem(spark, src), Tables.orders(spark, src),
         Tables.customer(spark, src)))
 
@@ -96,7 +93,7 @@ object BucketedFacts {
     val (bkt, bktWall) = measure("q3_bucketed_x970") {
       q3(li, ord, Tables.customer(spark, src))
     }
-    val bktPlan = ScaleSmoke.planFlags(
+    val bktPlan = PlanDump.planFlags(
       q3Plan(spark, li, ord, Tables.customer(spark, src)))
 
     val equal = base.map(_.toString).sameElements(bkt.map(_.toString))

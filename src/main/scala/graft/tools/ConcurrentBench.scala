@@ -35,13 +35,7 @@ object ConcurrentBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val clients = sys.env.getOrElse("SPARK_GRAFT_CLIENTS", "4").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32, confs = Seq("spark.scheduler.mode" -> "FAIR"))
 
     val subset = Bench.BaselineSubset.flatMap(k =>
       SparkEntry.queries.get(k).map(k -> _))

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Concurrent-CORRECTNESS probe (round-12 verdict item #8): the FAIR-pool
@@ -64,13 +64,7 @@ object ConcurrentVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val clients = sys.env.getOrElse("SPARK_GRAFT_CLIENTS", "4").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32, confs = Seq("spark.scheduler.mode" -> "FAIR"))
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val keys = SparkEntry.queries.keys.toSeq.sorted

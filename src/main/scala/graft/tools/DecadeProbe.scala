@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,16 +83,11 @@ object DecadeProbe {
     val src = sys.env.getOrElse("PROBE_SRC", "/root/testdata/sf0.1")
     val keys = sys.env.getOrElse("PROBE_KEYS", "q1")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256") // 970M-row window sorts: smaller per-task runs
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Value-neutral; the window probes shuffle+spill ~1.5B highly
-      // repetitive rows (N value-identical copies), where zstd's ratio is
-      // the difference between fitting this box's free disk and not.
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 256 partitions: 970M-row window sorts get smaller per-task runs.
+    // zstd is value-neutral; the window probes shuffle+spill ~1.5B highly
+    // repetitive rows (N value-identical copies), where zstd's ratio is
+    // the difference between fitting this box's free disk and not.
+    val spark = graft.Sessions.local(32, 256, confs = Seq("spark.io.compression.codec" -> "zstd"))
     Tables.configure(spark)
 
     // Overflow guard (r13 ADVICE; re-derived per r14 ADVICE — the old

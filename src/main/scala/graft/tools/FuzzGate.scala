@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -526,12 +525,7 @@ object FuzzGate {
     val src = sys.env.getOrElse("FUZZ_SRC", "/root/testdata/sf0.01")
     val out = sys.env.getOrElse("FUZZ_OUT", "target/fuzz")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32)
     Tables.configure(spark)
     tables.keys.foreach(t => Tables.table(spark, src, t).createOrReplaceTempView(t))
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.Graph
@@ -50,13 +49,7 @@ object GraphScale {
     val keys = sys.env.getOrElse("GRAPH_KEYS", "pagerank_cycles,triangles_star")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32, 256, confs = Seq("spark.io.compression.codec" -> "zstd"))
 
     var fail = false
 

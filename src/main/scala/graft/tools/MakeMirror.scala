@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Materialize a ScaleSmoke ×N mirror to parquet WITHOUT running the
   * smoke keys — the input surface for the scaled-mirror correctness gate
@@ -37,12 +36,7 @@ object MakeMirror {
     val tables = sys.env.get("MIRROR_TABLES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(ScaleSmoke.keyCols.keys.toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32)
     ScaleSmoke.synthesize(spark, src, out, factor, tables, singleDims, vectorMode)
     println(s"""{"mirror":"$out","src":"$src","factor":$factor,""" +
       s""""singleDims":$singleDims,"vectorMode":"$vectorMode"}""")

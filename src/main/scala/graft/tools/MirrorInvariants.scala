@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mirror-scale correctness for the keys the DuckDB oracle CANNOT reach
@@ -195,17 +195,11 @@ object MirrorInvariants {
     val src = sys.env.getOrElse("MIRROR_SRC", "/root/testdata/sf0.1")
     val dir = sys.env.getOrElse("MIRROR_DIR", "target/mirror_x10")
     val factor = sys.env.getOrElse("MIRROR_FACTOR", "10").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // zstd over the default lz4: the banded-signature shuffles here are
-      // highly repetitive, and the salted key's ×97 spill is what blew
-      // the disk budget in r13 — measured smaller under zstd at equal
-      // results (compression is value-neutral).
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // zstd over the default lz4: the banded-signature shuffles here are
+    // highly repetitive, and the salted key's ×97 spill is what blew
+    // the disk budget in r13 — measured smaller under zstd at equal
+    // results (compression is value-neutral).
+    val spark = graft.Sessions.local(32, confs = Seq("spark.io.compression.codec" -> "zstd"))
     var fail = false
     // MIRROR_KEYS=q_a,q_b restricts to a subset (local iteration / rerun
     // of one family); default runs every invariant.

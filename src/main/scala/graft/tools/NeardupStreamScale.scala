@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -73,14 +73,7 @@ object NeardupStreamScale {
       .getOrElse(if (face == "parity") 20L else 1000L)
     require(crashFrac >= 0 && crashFrac < 1, s"NEARDUP_CRASH_FRAC $crashFrac outside [0, 1)")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Streams.sessionConf(graft.Sessions.local(32))
     import spark.implicits._
 
     val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r17 optimization-round measurement probe: stage-level timings and
@@ -12,13 +11,7 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("PROBE_SF", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt, logLevel = "WARN")
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       System.err.println(f"[optprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")

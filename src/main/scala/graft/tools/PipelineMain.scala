@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.{Dedup, Tables}
 
@@ -26,11 +25,7 @@ object PipelineMain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_pipeline")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt, logLevel = "WARN")
     Tables.configure(spark)
 
     val docs = Tables.documents(spark, sfDir)

@@ -1,56 +1,95 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import scala.util.Try
 
-/** Dump `.explain("formatted")` for a set of declared queries to files —
-  * the r17 optimization round's plan-artifact surface (plans/r17/
-  * <key>_before.txt / _after.txt). The judge cannot run Spark; these
-  * files are the checkable record of every plan-shape claim in
-  * OPTIMIZATION_r17.md.
+/** The plan tool: one audit line per graded key on stdout, and optionally
+  * each key's `.explain("formatted")` as a file — the plan-artifact
+  * surface under plans/ (plans/r17/<key>_before.txt / _after.txt are the
+  * checkable record of every plan-shape claim in OPTIMIZATION_r17.md).
+  *
+  *   runMain graft.tools.PlanDump <key[,key...]|all> <sfDir>
+  *
+  * Audit line: the [[planFlags]] operator counts, each scan's ReadSchema
+  * (column pruning) and PushedFilters, and the whole-stage-codegen span
+  * count. Each key first executes through its OWN QueryExecution —
+  * df.write/foreachPartition build a derived QE and leave this one's
+  * adaptive plan at its initial guess — so the audit reads the FINAL
+  * adaptive plan, with its per-stage codegen markers.
   *
   * Env:
-  *   PLAN_KEYS  comma-separated query keys (required)
-  *   PLAN_SF    data dir (default /root/testdata/sf0.1)
-  *   PLAN_OUT   output dir (default plans/r17)
-  *   PLAN_SUFFIX  appended to each file name (default "_before")
-  *
-  * Uses the same session shape as Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus) so the dumped plan is the plan the bench
-  * actually times. AQE leaves `AdaptiveSparkPlan isFinalPlan=false`
-  * wrappers in a pre-execution explain; Exchange counts/join strategies
-  * of the initial plan are still the comparable shape.
+  *   PLAN_OUT     when set, write <PLAN_OUT>/<key><PLAN_SUFFIX>.txt. The
+  *                explain is taken BEFORE execution: AQE's
+  *                `isFinalPlan=false` wrapper, whose Exchange counts and
+  *                join strategies are the comparable shape.
+  *   PLAN_SUFFIX  file-name suffix (default "_before")
+  *   SPARK_GRAFT_CPUS  local[cpus], shuffle.partitions = cpus (default 32):
+  *                Bench's session shape, so the plan is the one the bench
+  *                times.
   */
 object PlanDump {
+  /** The section of an executed adaptive plan string that ran: it prints
+    * "== Final Plan ==" followed by "== Initial Plan ==", and reading both
+    * doubles every operator. Other plan strings pass through whole.
+    */
+  def finalPlan(plan: String): String = plan.split("== Initial Plan ==").head
+
+  /** Join-strategy histogram of a plan string — the "shape" that must not
+    * flip between scales (ScaleSmoke, BucketedFacts).
+    */
+  def planFlags(planIn: String): Map[String, Int] = {
+    val plan = finalPlan(planIn)
+    def n(s: String) = s.r.findAllIn(plan).size
+    Map(
+      "CartesianProduct" -> n("CartesianProduct"),
+      "BNLJ" -> n("BroadcastNestedLoopJoin"),
+      "SMJ" -> n("SortMergeJoin"),
+      "BHJ" -> n("BroadcastHashJoin"),
+      "SHJ" -> n("ShuffledHashJoin"),
+      "Exchange" -> n("Exchange "),
+      // Runtime skew splits (AQE OptimizeSkewedJoin) — informational in
+      // the shape compare (firing MORE at N× is the planner working),
+      // gated explicitly for ScaleSmoke's planted-skew key.
+      "skew" -> n("skew=true")
+    ).filter(_._2 > 0)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("PLAN_SF", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("PLAN_OUT", "plans/r17")
+    require(args.length == 2, "usage: PlanDump <key[,key...]|all> <sfDir>")
+    val keys = if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
+      else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val sfDir = args(1)
+    val outDir = sys.env.get("PLAN_OUT")
     val suffix = sys.env.getOrElse("PLAN_SUFFIX", "_before")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val keys = sys.env.getOrElse("PLAN_KEYS",
-      sys.error("PLAN_KEYS required")).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(Paths.get(outDir))
-    val qs = graft.SparkEntry.queries
-    for (k <- keys) qs.get(k) match {
-      case None => System.err.println(s"[plandump] SKIP unknown key $k")
-      case Some(fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val text = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(outDir, s"$k$suffix.txt"), text)
-          System.err.println(s"[plandump] wrote $k$suffix (${text.length} chars)")
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[plandump] FAIL $k: ${e.getMessage}")
-        }
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    val frames = keys.map(k => k -> Try {
+      val df = SparkEntry.queries.getOrElse(k, sys.error("unknown key"))(spark, sfDir)
+      outDir.foreach(d => Files.writeString(Paths.get(d, s"$k$suffix.txt"),
+        df.queryExecution.explainString(FormattedMode)))
+      df
+    })
+    // Every file is written before any key executes: execution advances
+    // the session's RDD and plan ids, which the explain text prints.
+    for ((k, frame) <- frames) try {
+      val df = frame.get
+      df.queryExecution.toRdd.foreachPartition(_ => ())
+      val plan = finalPlan(df.queryExecution.executedPlan.toString)
+      val flags = planFlags(plan).toSeq.sorted.map { case (f, c) => s"$f=$c" }
+      // ReadSchema/PushedFilters fragments of the (very long) scan lines.
+      val scans = plan.linesIterator.filter(_.contains("FileScan")).map { l =>
+        val schema = "ReadSchema: ([^,]*(?:,[^ ]*)*)".r.findFirstMatchIn(l).map(_.group(1))
+        val pushed = "PushedFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(l).map(_.group(1))
+        s"scan ReadSchema=${schema.getOrElse("?").take(160)}" +
+          pushed.fold("")(p => s" PushedFilters=[${p.take(80)}]")
+      }
+      // WholeStageCodegenExec renders as a `*(id)` prefix, not by name.
+      val codegen = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
+      println((Seq(f"[plan] $k%-24s") ++ flags ++ scans :+ s"codegen=$codegen").mkString(" "))
+    } catch {
+      case e: Throwable => println(s"[plan] $k ERROR ${String.valueOf(e.getMessage).take(80)}")
     }
     spark.stop()
   }

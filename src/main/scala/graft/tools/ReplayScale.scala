@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -36,14 +35,7 @@ object ReplayScale {
     val segments = sys.env.getOrElse("REPLAY_SEGMENTS", "96").toInt
     val crashFrac = sys.env.getOrElse("REPLAY_CRASH_FRAC", "0.5").toDouble
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Streams.sessionConf(graft.Sessions.local(32))
     Tables.configure(spark)
 
     val ev = Tables.events(spark, src)

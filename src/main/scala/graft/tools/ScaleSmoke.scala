@@ -53,6 +53,8 @@ import org.apache.spark.sql.functions._
   *   SCALE_SMOKE_SRC (default /root/testdata/sf0.01), SCALE_SMOKE_FACTOR
   *   (default 10), SCALE_SMOKE_OUT (default target/scalesmoke). Prints one
   *   JSON line per key plus a trailing summary line; exits 1 on violation.
+  *   Heap is the launching JVM's -Xmx: in local mode `spark.driver.memory`
+  *   only takes effect before the driver JVM starts, so the session sets none.
   */
 object ScaleSmoke {
 
@@ -272,29 +274,6 @@ object ScaleSmoke {
         s""""tables":[${tables.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]}""")
   }
 
-  /** Join-strategy histogram of a plan string — the "shape" that must not
-    * flip between scales (same extraction as PlanAudit).
-    */
-  def planFlags(planIn: String): Map[String, Int] = {
-    // An executed AdaptiveSparkPlan prints "== Final Plan ==" followed by
-    // "== Initial Plan ==" — count only the final section, or every
-    // operator doubles.
-    val plan = planIn.split("== Initial Plan ==").head
-    def n(s: String) = s.r.findAllIn(plan).size
-    Map(
-      "CartesianProduct" -> n("CartesianProduct"),
-      "BNLJ" -> n("BroadcastNestedLoopJoin"),
-      "SMJ" -> n("SortMergeJoin"),
-      "BHJ" -> n("BroadcastHashJoin"),
-      "SHJ" -> n("ShuffledHashJoin"),
-      "Exchange" -> n("Exchange "),
-      // Runtime skew splits (AQE OptimizeSkewedJoin) — informational in
-      // the shape compare (firing MORE at N× is the planner working),
-      // gated explicitly for the planted-skew key below.
-      "skew" -> n("skew=true")
-    ).filter(_._2 > 0)
-  }
-
   /** Build + force one graded key against `dir`. Construction is INSIDE the
     * timed region: the iterative keys (components, IVF/PQ training) execute
     * bounded jobs while the DataFrame is being built, and that cost is part
@@ -395,7 +374,7 @@ object ScaleSmoke {
       // splits) are visible.
       val qe = df.queryExecution
       qe.toRdd.foreachPartition(it => rows.add(it.size.toLong))
-      val flags = planFlags(qe.executedPlan.toString)
+      val flags = PlanDump.planFlags(qe.executedPlan.toString)
       ((System.nanoTime() - t0) / 1e9, rows.value, flags)
     }
     if (name == "q_skew_join_aqe")
@@ -460,13 +439,7 @@ object ScaleSmoke {
     // at factor 10 would land at ~100× and trip this by an order of
     // magnitude, which is the regime the gate exists to catch.
     val slack = sys.env.getOrElse("SCALE_SMOKE_SLACK", "3.0").toDouble
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32)
 
     val scaledDir = s"$out/x$factor"
     // SCALE_SMOKE_REUSE=1 skips re-synthesis when the mirror already

@@ -156,12 +156,7 @@ object SemDedupPlant {
     val q = sys.env.getOrElse("PLANT_Q", "56").toInt
     val dir = sys.env.getOrElse("PLANT_DIR", s"target/semdedup_plant_q$q")
     val out = sys.env.getOrElse("PLANT_OUT", "SEMDEDUP_PLANT_r15.json")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(32)
 
     val k = q * q
     val n = 64L * k

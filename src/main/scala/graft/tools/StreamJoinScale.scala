@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -67,18 +67,11 @@ object StreamJoinScale {
     val crashFrac = sys.env.getOrElse("STREAMJOIN_CRASH_FRAC", "0.5").toDouble
     require(crashFrac >= 0 && crashFrac < 1, s"STREAMJOIN_CRASH_FRAC $crashFrac outside [0, 1)")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Outer-join null emission depends on a batch RUNNING after the
-      // watermark rises; pin the default so a conf drift can't silently
-      // strand unmatched rows in state (see the sentinel note below).
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Outer-join null emission depends on a batch RUNNING after the
+    // watermark rises; pin the default so a conf drift can't silently
+    // strand unmatched rows in state (see the sentinel note below).
+    val spark = Streams.sessionConf(graft.Sessions.local(32,
+      confs = Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")))
     Tables.configure(spark)
 
     val ev = Tables.events(spark, src)

@@ -164,14 +164,7 @@ object StreamScale {
     val crashFrac = sys.env.getOrElse("STREAM_CRASH_FRAC", "0").toDouble
     require(crashFrac >= 0 && crashFrac < 1, s"STREAM_CRASH_FRAC $crashFrac outside [0, 1)")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Streams.sessionConf(graft.Sessions.local(32))
     Tables.configure(spark)
 
     val inputDir = s"$out/input"
@@ -347,7 +340,6 @@ object StreamScale {
     // twin evaluated over the SAME ×97 mirror. TimeMode.None processors
     // emit changelogs; snapshots are max-version/max-count extractions.
     import graft.streaming.Streams.Event
-    Streams.sessionConf(spark)
     import spark.implicits._
     def asEvents(df: DataFrame) = df.as[Event]
     val batchEv = ev // the mirror events frame (no sentinel — it lives only in the ingest dir)

@@ -191,10 +191,8 @@ class PlanSpec extends AnyFunSuite {
     val hot = Seq("arrayintersectsize", "minhashbands", "arrayfirstmatchindex", "charshingles")
     def assertStarred(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
       df.collect()
-      // The adaptive plan string carries BOTH the final and the initial
-      // plan; only the final section reflects what actually executed.
-      val lines = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head.linesIterator.toSeq
+      val lines = graft.tools.PlanDump.finalPlan(df.queryExecution.executedPlan.toString)
+        .linesIterator.toSeq
       val hotLines = lines.filter(l => hot.exists(l.toLowerCase.contains))
       assert(hotLines.nonEmpty, s"$what: no graft expression found in the final plan")
       hotLines.foreach { l =>

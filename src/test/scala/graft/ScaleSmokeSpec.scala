@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.tools.ScaleSmoke
+import graft.tools.{PlanDump, ScaleSmoke}
 
 /** Deterministic half of the scale-proof story (the timed half runs in
   * `graft.tools.ScaleSmoke`'s main, which is wall-clock and so lives
@@ -201,12 +201,22 @@ class ScaleSmokeSpec extends AnyFunSuite {
       // star, scaled semdedup, compound-blocked linkage) live in
       // smokeFrames, not the graded query map.
       val fn = ScaleSmoke.smokeFrames.getOrElse(k, SparkEntry.queries(k))
-      val f1 = ScaleSmoke.planFlags(fn(spark, TestSpark.sfDir)
+      val f1 = PlanDump.planFlags(fn(spark, TestSpark.sfDir)
         .queryExecution.executedPlan.toString)
-      val fN = ScaleSmoke.planFlags(fn(spark, outDir)
+      val fN = PlanDump.planFlags(fn(spark, outDir)
         .queryExecution.executedPlan.toString)
       assert(ScaleSmoke.planShapeOk(f1, fN), s"$k plan shape flipped at ${factor}×: $f1 -> $fN")
     }
+  }
+
+  test("planFlags counts the executed adaptive plan's final section only") {
+    val df = spark.range(1000).groupBy(col("id") % 7).count()
+    df.collect()
+    val raw = df.queryExecution.executedPlan.toString
+    // The executed AQE string holds the one shuffle twice: under
+    // "== Final Plan ==" and again under "== Initial Plan ==".
+    assert("Exchange ".r.findAllIn(raw).size == 2, raw)
+    assert(PlanDump.planFlags(raw) == Map("Exchange" -> 1), raw)
   }
 
   test("planShapeOk accepts only identity or strict broadcast demotion") {

@@ -125,6 +125,13 @@ class SemDedupSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty corpus clusters to the empty assignment") {
+    val empty = SemDedup.plantedCorpus(spark, TestSpark.sfDir).where(lit(false))
+    val cells = SemDedup.deterministicCells(empty, SemDedup.K, 1)
+    assert(cells.columns.toSeq.take(2) == Seq("vec_id", "cell"))
+    assert(cells.collect().isEmpty)
+  }
+
   test("all eight id-order seed cells are non-empty after one update") {
     // A seed is distance-0 to its own centroid at assignment 0, so with
     // Iters = 1 no cell can empty out — the precondition that lets both

@@ -19,29 +19,27 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/p256_gate.json}
 CLASSES=${GATE_CLASSES:-target/scala-2.13/classes}
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 CP="$CLASSES:/opt/spark/jars/*"
 SF=/root/testdata/sf0.1
 
-STAB21="q_containment_pairs,q_cosine_neardup,q_cosine_resolve,q_decontaminate_fuzzy,q_fuzzy_linkage,q_fuzzy_match,q_fuzzy_match_scaled,q_graph_triangles,q_jw_threshold_join,q_minhash_recall,q_neardup_components,q_neardup_delta,q_neardup_lsh,q_neardup_lsh_salted,q_neardup_pairs,q_neardup_resolve,q_ngram_jaccard,q_record_linkage,q_similarity_join,q_sorted_neighborhood,q_substring_dedup"
+export STAB21="q_containment_pairs,q_cosine_neardup,q_cosine_resolve,q_decontaminate_fuzzy,q_fuzzy_linkage,q_fuzzy_match,q_fuzzy_match_scaled,q_graph_triangles,q_jw_threshold_join,q_minhash_recall,q_neardup_components,q_neardup_delta,q_neardup_lsh,q_neardup_lsh_salted,q_neardup_pairs,q_neardup_resolve,q_ngram_jaccard,q_record_linkage,q_similarity_join,q_sorted_neighborhood,q_substring_dedup"
 
 if [ "${SKIP_DUMP:-}" != "1" ]; then
   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
-    java $ADD_OPENS -Xmx48g -cp "$CP" graft.Verify "$SF" target/verify_p256 \
+    java @tools/jdk17-add-opens.args -Xmx48g -cp "$CP" graft.Verify "$SF" target/verify_p256 \
     2> /tmp/p256_dump.log
   # 32-partition twin, only the stability keys (everything else grades
   # against DuckDB directly).
   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$STAB21" \
-    java $ADD_OPENS -Xmx48g -cp "$CP" graft.Verify "$SF" target/verify_p32s \
+    java @tools/jdk17-add-opens.args -Xmx48g -cp "$CP" graft.Verify "$SF" target/verify_p32s \
     2> /tmp/p32s_dump.log
 fi
 
 # DuckDB compare for the non-quadratic oracled surface, sharded 4 ways.
 python3 - <<'EOF'
-import json
+import json, os
 oracle = json.load(open('target/verify_p256/oracle_sql.json'))
-stab = set(
-  "q_containment_pairs,q_cosine_neardup,q_cosine_resolve,q_decontaminate_fuzzy,q_fuzzy_linkage,q_fuzzy_match,q_fuzzy_match_scaled,q_graph_triangles,q_jw_threshold_join,q_minhash_recall,q_neardup_components,q_neardup_delta,q_neardup_lsh,q_neardup_lsh_salted,q_neardup_pairs,q_neardup_resolve,q_ngram_jaccard,q_record_linkage,q_similarity_join,q_sorted_neighborhood,q_substring_dedup".split(','))
+stab = set(os.environ['STAB21'].split(','))
 keys = sorted(set(oracle) - stab)
 open('/tmp/p256_keys.txt','w').write(','.join(keys))
 print(f"{len(keys)} DuckDB-compared keys, {len(stab)} stability keys")
@@ -59,7 +57,7 @@ wait
 python3 - "$OUT" <<'EOF'
 import duckdb, json, glob, sys, os
 out = sys.argv[1]
-stab = "q_containment_pairs,q_cosine_neardup,q_cosine_resolve,q_decontaminate_fuzzy,q_fuzzy_linkage,q_fuzzy_match,q_fuzzy_match_scaled,q_graph_triangles,q_jw_threshold_join,q_minhash_recall,q_neardup_components,q_neardup_delta,q_neardup_lsh,q_neardup_lsh_salted,q_neardup_pairs,q_neardup_resolve,q_ngram_jaccard,q_record_linkage,q_similarity_join,q_sorted_neighborhood,q_substring_dedup".split(',')
+stab = os.environ['STAB21'].split(',')
 con = duckdb.connect(); con.execute("SET threads=16; SET memory_limit='24GB'")
 def g(d, k):
     p = f"{d}/{k}"

@@ -21,12 +21,11 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/x970_gate.json}
 CLASSES=${GATE_CLASSES:-target/scala-2.13/classes}
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 CP="$CLASSES:/opt/spark/jars/*"
 
 # Money-sum lint first: a new unhardened raw-double money sum should fail
 # in seconds here, not as a hash divergence hours into the dump.
-java $ADD_OPENS -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001 \
+java @tools/jdk17-add-opens.args -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001 \
   2>/dev/null | grep "money-sum-lint"
 
 
@@ -34,7 +33,7 @@ java $ADD_OPENS -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001
   MIRROR_SRC=/root/testdata/sf0.1 MIRROR_FACTOR=970 MIRROR_OUT=target/mirror_x970 \
   MIRROR_SINGLE_DIMS=1 \
   MIRROR_TABLES=lineitem,orders,customer,supplier,part,nation,region,events,documents \
-  java $ADD_OPENS -Xmx48g -cp "$CP" graft.tools.MakeMirror
+  java @tools/jdk17-add-opens.args -Xmx48g -cp "$CP" graft.tools.MakeMirror
 
 python3 - <<'EOF'
 import json, os
@@ -81,7 +80,7 @@ done
 
 if [ "${SKIP_DUMP:-}" != "1" ] && [ -n "$DUMP" ]; then
   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$DUMP" SPARK_GRAFT_NO_COALESCE=1 \
-    java $ADD_OPENS -Xmx80g -cp "$CP" graft.Verify target/mirror_x970 target/verify_x970r13
+    java @tools/jdk17-add-opens.args -Xmx80g -cp "$CP" graft.Verify target/mirror_x970 target/verify_x970r13
 fi
 wait
 

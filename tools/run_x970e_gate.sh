@@ -16,19 +16,18 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/x970e_gate.json}
 CLASSES=${GATE_CLASSES:-target/scala-2.13/classes}
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 CP="$CLASSES:/opt/spark/jars/*"
 MIRROR=target/mirror_x970e
 
 KEYS="q_ann_delta,q_ann_ivf,q_ann_ivf_partial,q_ann_ivf_trained,q_ann_ivfpq,q_ann_pq,q_cosine_topk,q_embed_quantize,q_hybrid_rrf,q_knn_batch,q_pca_check,q_pca_cov_delta,q_pca_covariance,q_semdedup,q_sql_registered,q_vector_norm"
 
-java $ADD_OPENS -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001 \
+java @tools/jdk17-add-opens.args -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001 \
   2>/dev/null | grep "money-sum-lint"
 
 if [ ! -f $MIRROR/_GRAFT_MIRROR.json ]; then
   MIRROR_SRC=/root/testdata/sf0.1 MIRROR_FACTOR=970 MIRROR_OUT=$MIRROR \
     MIRROR_VECTOR_MODE=signflip MIRROR_TABLES=embeddings \
-    java $ADD_OPENS -Xmx16g -cp "$CP" graft.tools.MakeMirror
+    java @tools/jdk17-add-opens.args -Xmx16g -cp "$CP" graft.tools.MakeMirror
   # q_hybrid_rrf fuses BM25 over documents with cosine over embeddings:
   # the ×970 letter-rotation documents mirror is transform-identical to
   # what MIRROR_TABLES=embeddings,documents would write — link when the
@@ -38,14 +37,14 @@ if [ ! -f $MIRROR/_GRAFT_MIRROR.json ]; then
   else
     MIRROR_SRC=/root/testdata/sf0.1 MIRROR_FACTOR=970 MIRROR_OUT=$MIRROR/_docs \
       MIRROR_TABLES=documents \
-      java $ADD_OPENS -Xmx16g -cp "$CP" graft.tools.MakeMirror
+      java @tools/jdk17-add-opens.args -Xmx16g -cp "$CP" graft.tools.MakeMirror
     mv $MIRROR/_docs/documents.parquet $MIRROR/documents.parquet && rm -rf $MIRROR/_docs
   fi
 fi
 
 if [ "${SKIP_DUMP:-}" != "1" ]; then
   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_NO_COALESCE=1 \
-    java $ADD_OPENS -Xmx80g -cp "$CP" graft.Verify $MIRROR target/verify_x970e \
+    java @tools/jdk17-add-opens.args -Xmx80g -cp "$CP" graft.Verify $MIRROR target/verify_x970e \
     2> /tmp/x970e_dump.log
 fi
 

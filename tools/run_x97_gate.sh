@@ -6,15 +6,15 @@
 # dump is the long pole. Requires: compiled classes, /opt/spark/jars.
 #
 # Usage: tools/run_x97_gate.sh [outJson]   (default /tmp/x97_gate.json)
+# Env: GATE_CLASSES (frozen classpath dir).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/x97_gate.json}
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+CP="${GATE_CLASSES:-target/scala-2.13/classes}:/opt/spark/jars/*"
 
 # Money-sum lint first: a new unhardened raw-double money sum should fail
 # in seconds here, not as a hash divergence hours into the dump.
-java $ADD_OPENS -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001 \
+java @tools/jdk17-add-opens.args -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001 \
   2>/dev/null | grep "money-sum-lint"
 
 
@@ -23,7 +23,7 @@ java $ADD_OPENS -Xmx6g -cp "$CP" graft.tools.MoneySumLint /root/testdata/sf0.001
 # instead of feeding the whole 2-3 h gate incomplete data.
 [ -f target/mirror_x97/_GRAFT_MIRROR.json ] || \
   MIRROR_SRC=/root/testdata/sf0.1 MIRROR_FACTOR=97 MIRROR_OUT=target/mirror_x97 \
-  java $ADD_OPENS -Xmx32g -cp "$CP" graft.tools.MakeMirror
+  java @tools/jdk17-add-opens.args -Xmx32g -cp "$CP" graft.tools.MakeMirror
 
 # The 173-key oracled surface = the x10 gate list (quadratic pair-CTE
 # oracles already excluded there; they are covered by MirrorInvariants).
@@ -35,7 +35,7 @@ EOF
 )
 
 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$KEYS" \
-  java $ADD_OPENS -Xmx96g -cp "$CP" graft.Verify target/mirror_x97 target/verify_x97
+  java @tools/jdk17-add-opens.args -Xmx96g -cp "$CP" graft.Verify target/mirror_x97 target/verify_x97
 
 # 4 shards; q5/cbo separately with the textual left-deep plan pinned —
 # under the replicated-dims profile their oracle joins fan out ~1e11 row

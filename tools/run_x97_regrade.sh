@@ -15,7 +15,6 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/x97_regrade.json}
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 CP="${GATE_CLASSES:-target/scala-2.13/classes}:/opt/spark/jars/*"
 
 KEYS=${REGRADE_KEYS:-q_skew_join,q_skew_join_aqe,q_join_range,q_join_range_bucketed,q_profile}
@@ -23,10 +22,10 @@ BASE=${REGRADE_BASE:-CORRECTNESS_x97_r13.json}
 
 [ -f target/mirror_x97/_GRAFT_MIRROR.json ] || \
   MIRROR_SRC=/root/testdata/sf0.1 MIRROR_FACTOR=97 MIRROR_OUT=target/mirror_x97 \
-  java $ADD_OPENS -Xmx32g -cp "$CP" graft.tools.MakeMirror
+  java @tools/jdk17-add-opens.args -Xmx32g -cp "$CP" graft.tools.MakeMirror
 
 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_NO_COALESCE=1 \
-  java $ADD_OPENS -Xmx64g -cp "$CP" graft.Verify target/mirror_x97 target/verify_x97r14
+  java @tools/jdk17-add-opens.args -Xmx64g -cp "$CP" graft.Verify target/mirror_x97 target/verify_x97r14
 
 COMPARE_THREADS=16 COMPARE_MEM=40GB python3 -u tools/compare.py \
   target/mirror_x97 target/verify_x97r14 "$KEYS" /tmp/x97rg_cmp.json
