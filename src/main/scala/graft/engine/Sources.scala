@@ -212,7 +212,7 @@ object Sources {
     try {
       val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
       def commit(name: String): Unit =
-        fs.create(new Path(s"$dir/$name", "_GRAFT_COMMITTED"), true).close()
+        fs.create(new Path(s"$dir/$name", graft.streaming.Streams.CommitMarker), true).close()
       val ev = eventsSlice(s, d)
       val mid = lit("2024-01-16").cast("timestamp")
       ev.where(col("ts") < mid).write.parquet(s"$dir/batch_000000")

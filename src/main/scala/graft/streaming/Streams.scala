@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.engine.Windowed
 
 /** Structured Streaming layer — the reference's actual semantics
@@ -1178,6 +1179,50 @@ object Streams {
     }
   }
 
+  // ------------------------- marker-commit protocol (the foreachBatch sinks)
+
+  /** Written into a batch/version directory after its data: a directory
+    * is committed iff it holds this file ([[ingestBatch]] scaladoc).
+    */
+  private[graft] val CommitMarker = "_GRAFT_COMMITTED"
+
+  /** `dir` with the Hadoop FileSystem it resolves to (HDFS/S3A/local). */
+  private def rooted(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val root = new Path(dir)
+    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
+  private def isCommitted(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, CommitMarker))
+
+  /** Commit `root/name` exactly once per replay of a batch: false (and
+    * nothing written) when it is already committed; otherwise a partial
+    * directory left by a crashed write is deleted, `write` fills the
+    * directory, and the marker goes in last.
+    */
+  private def commitOnce(fs: FileSystem, root: Path, name: String)(write: Path => Unit): Boolean = {
+    fs.mkdirs(root)
+    val target = new Path(root, name)
+    if (isCommitted(fs, target)) return false
+    if (fs.exists(target)) fs.delete(target, true)
+    write(target)
+    fs.create(new Path(target, CommitMarker), true).close()
+    true
+  }
+
+  /** Committed `<prefix><id>` directories under `root` as (id, path), in
+    * NUMERIC id order: `%06d` widens to seven digits at id 1,000,000, so
+    * name order would put `v_1000000` before `v_999999`.
+    */
+  private def listCommitted(fs: FileSystem, root: Path, prefix: String): Seq[(Long, String)] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toIndexedSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory && name.startsWith(prefix) && isCommitted(fs, st.getPath))
+        name.stripPrefix(prefix).toLongOption.map(_ -> st.getPath.toString)
+      else None
+    }.sortBy(_._1)
+
   // ---------------------------- incremental near-dup ingest (foreachBatch)
 
   /** One ingest step of [[incrementalNearDupIngest]] — public so batch
@@ -1218,41 +1263,33 @@ object Streams {
       tauNum: Int = 9, tauDen: Int = 10, threshold: Double = 0.9,
       shape: graft.engine.Dedup.LshShape = graft.engine.Dedup.Auto()): Unit = {
     import graft.engine.Dedup
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val root = new Path(corpusDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val target = new Path(root, f"batch_$batchId%06d")
-    val Marker = "_GRAFT_COMMITTED"
-    if (fs.exists(new Path(target, Marker))) return // replayed batch — already ingested
-    if (fs.exists(target)) fs.delete(target, true) // partial dir from a crashed write
-    val staged = Dedup.fanOut(batch).withColumn("toks", Dedup.normTokens(col("text")))
-    val sigs = Dedup.signatures(staged).where(size(col("toks")) > 0).localCheckpoint()
-    val within = Dedup.lshNearDupPairs(sigs, "toks", tauNum, tauDen, threshold, shape)
-    val afterWithin = sigs
-      .join(within.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val parts = committedBatchDirs(fs, root)
-    val survivors =
-      if (parts.isEmpty) afterWithin
-      else {
-        // mergeSchema: a long-lived corpus index gains columns across
-        // months of batches (Tables.readMergedSchema scaladoc); a plain
-        // read would type the scan from whichever footer it sampled.
-        // The probe needs only the three index columns, which every
-        // schema version carries.
-        val corpus = spark.read.option("mergeSchema", "true").parquet(parts: _*)
-          .select(col("doc_id"), col("toks"), col("bands"))
-        val vsCorpus = Dedup.nearDupAgainst(afterWithin, corpus, "toks",
-          tauNum, tauDen, threshold, shape)
-        afterWithin.join(vsCorpus.select(col("doc_a").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-      }
-    survivors.write.parquet(target.toString)
-    // Marker AFTER the write returns — completing the marker-gated
-    // idempotency protocol independent of committer configuration.
-    fs.create(new Path(target, Marker), true).close()
+    val (fs, root) = rooted(spark, corpusDir)
+    commitOnce(fs, root, f"batch_$batchId%06d") { target =>
+      val staged = Dedup.fanOut(batch).withColumn("toks", Dedup.normTokens(col("text")))
+      val sigs = Dedup.signatures(staged).where(size(col("toks")) > 0).localCheckpoint()
+      val within = Dedup.lshNearDupPairs(sigs, "toks", tauNum, tauDen, threshold, shape)
+      val afterWithin = sigs
+        .join(within.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      val parts = listCommitted(fs, root, "batch_").map(_._2)
+      val survivors =
+        if (parts.isEmpty) afterWithin
+        else {
+          // mergeSchema: a long-lived corpus index gains columns across
+          // months of batches (Tables.readMergedSchema scaladoc); a plain
+          // read would type the scan from whichever footer it sampled.
+          // The probe needs only the three index columns, which every
+          // schema version carries.
+          val corpus = spark.read.option("mergeSchema", "true").parquet(parts: _*)
+            .select(col("doc_id"), col("toks"), col("bands"))
+          val vsCorpus = Dedup.nearDupAgainst(afterWithin, corpus, "toks",
+            tauNum, tauDen, threshold, shape)
+          afterWithin.join(vsCorpus.select(col("doc_a").as("doc_id")).distinct(),
+            Seq("doc_id"), "left_anti")
+        }
+      survivors.write.parquet(target.toString)
+    }
   }
 
   /** Streaming corpus ingest with NEAR-duplicate suppression: each
@@ -1310,21 +1347,14 @@ object Streams {
     * micro-batch instead of by day changes nothing downstream.
     */
   def partialsBatch(batch: DataFrame, partialsDir: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(partialsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val target = new Path(root, f"batch_$batchId%06d")
-    val Marker = "_GRAFT_COMMITTED"
-    if (fs.exists(new Path(target, Marker))) return
-    if (fs.exists(target)) fs.delete(target, true)
-    batch
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(graft.engine.Relational.cents(col("value"))).as("sum_value_cents"))
-      .write.parquet(target.toString)
-    fs.create(new Path(target, Marker), true).close()
+    val (fs, root) = rooted(batch.sparkSession, partialsDir)
+    commitOnce(fs, root, f"batch_$batchId%06d") { target =>
+      batch
+        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(graft.engine.Relational.cents(col("value"))).as("sum_value_cents"))
+        .write.parquet(target.toString)
+    }
   }
 
   // ------------------------------------- streaming keyed upsert (CDC apply)
@@ -1350,28 +1380,20 @@ object Streams {
   def upsertBatch(batch: DataFrame, dir: String, batchId: Long,
       keyCols: Seq[String], order: Seq[Column],
       tombstoneCol: Option[String] = None): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.engine.Dedup
     val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val target = new Path(root, f"v_$batchId%06d")
-    val Marker = "_GRAFT_COMMITTED"
-    if (fs.exists(new Path(target, Marker))) return // replayed, already applied
-    if (fs.exists(target)) fs.delete(target, true)  // crashed partial write
-    val corpus = readSnapshotVersion(spark, dir).getOrElse(batch.limit(0))
-    val merged = tombstoneCol match {
-      case Some(t) => Dedup.mergeSnapshotWithDeletes(corpus, batch, keyCols, order, t)
-      case None => Dedup.mergeSnapshot(corpus, batch, keyCols, order)
+    val (fs, root) = rooted(spark, dir)
+    val applied = commitOnce(fs, root, f"v_$batchId%06d") { target =>
+      val corpus = readSnapshotVersion(spark, dir).getOrElse(batch.limit(0))
+      val merged = tombstoneCol match {
+        case Some(t) => Dedup.mergeSnapshotWithDeletes(corpus, batch, keyCols, order, t)
+        case None => Dedup.mergeSnapshot(corpus, batch, keyCols, order)
+      }
+      merged.write.parquet(target.toString)
     }
-    merged.write.parquet(target.toString)
-    fs.create(new Path(target, Marker), true).close()
-    fs.listStatus(root).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_") &&
-        st.getPath.getName < target.getName &&
-        fs.exists(new Path(st.getPath, Marker)))
-      .foreach(st => fs.delete(st.getPath, true))
+    if (applied) listCommitted(fs, root, "v_").foreach { case (id, p) =>
+      if (id < batchId) fs.delete(new Path(p), true)
+    }
   }
 
   /** Sweep UNCOMMITTED batch/version directories — the cleanup half of
@@ -1395,9 +1417,7 @@ object Streams {
     */
   def vacuumUncommitted(spark: SparkSession, dir: String,
       graceMs: Long = 24L * 3600 * 1000): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = rooted(spark, dir)
     if (!fs.exists(root)) return Nil
     val cutoff = System.currentTimeMillis() - graceMs
     def newestMtime(p: Path): Long = {
@@ -1407,8 +1427,7 @@ object Streams {
           else st.getModificationTime).toSeq).max
     }
     fs.listStatus(root).toIndexedSeq
-      .filter(st => st.isDirectory &&
-        !fs.exists(new Path(st.getPath, "_GRAFT_COMMITTED")) &&
+      .filter(st => st.isDirectory && !isCommitted(fs, st.getPath) &&
         newestMtime(st.getPath) <= cutoff)
       .map { st => fs.delete(st.getPath, true); st.getPath.getName }
       .sorted
@@ -1416,15 +1435,9 @@ object Streams {
 
   /** The latest committed snapshot version under `dir`, if any. */
   def readSnapshotVersion(spark: SparkSession, dir: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    fs.listStatus(root).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_") &&
-        fs.exists(new Path(st.getPath, "_GRAFT_COMMITTED")))
-      .map(_.getPath).sortBy(_.getName).lastOption
-      .map(p => graft.engine.Tables.configure(spark).read.parquet(p.toString))
+    val (fs, root) = rooted(spark, dir)
+    listCommitted(fs, root, "v_").lastOption
+      .map { case (_, p) => graft.engine.Tables.configure(spark).read.parquet(p) }
   }
 
   /** Standing streaming upsert: a changelog stream maintained as a keyed
@@ -1456,30 +1469,24 @@ object Streams {
     */
   def dqGateBatch(batch: DataFrame, rules: Seq[graft.engine.Profile.Rule],
       corpusDir: String, quarantineDir: String, batchId: Long): Boolean = {
-    import org.apache.hadoop.fs.Path
     val b = batch.localCheckpoint()
     try {
       val report = graft.engine.Profile.check(b, rules).collect() // ≤ |rules| rows
       val ok = report.forall(_.getAs[Boolean]("passed"))
-      val root = new Path(if (ok) corpusDir else quarantineDir)
-      val fs = root.getFileSystem(b.sparkSession.sparkContext.hadoopConfiguration)
-      fs.mkdirs(root)
-      val target = new Path(root, f"batch_$batchId%06d")
-      val Marker = "_GRAFT_COMMITTED"
-      if (fs.exists(new Path(target, Marker))) return ok // replayed, same verdict
-      if (fs.exists(target)) fs.delete(target, true)
-      b.write.parquet(target.toString)
-      if (!ok) {
-        // Rule names are JSON-safe by construction: Profile.check
-        // rejects names outside [A-Za-z0-9_.- ] before this runs.
-        val failing = report.filterNot(_.getAs[Boolean]("passed"))
-          .map(r => s"""{"rule":"${r.getString(0)}","n_violations":${r.getLong(1)}}""")
-          .mkString("[", ",", "]")
-        val out = fs.create(new Path(target, "_GRAFT_DQ_REPORT.json"), true)
-        out.write(failing.getBytes("UTF-8")); out.close()
+      val (fs, root) = rooted(b.sparkSession, if (ok) corpusDir else quarantineDir)
+      commitOnce(fs, root, f"batch_$batchId%06d") { target =>
+        b.write.parquet(target.toString)
+        if (!ok) {
+          // Rule names are JSON-safe by construction: Profile.check
+          // rejects names outside [A-Za-z0-9_.- ] before this runs.
+          val failing = report.filterNot(_.getAs[Boolean]("passed"))
+            .map(r => s"""{"rule":"${r.getString(0)}","n_violations":${r.getLong(1)}}""")
+            .mkString("[", ",", "]")
+          val out = fs.create(new Path(target, "_GRAFT_DQ_REPORT.json"), true)
+          out.write(failing.getBytes("UTF-8")); out.close()
+        }
       }
-      fs.create(new Path(target, Marker), true).close()
-      ok
+      ok // a replay lands on the same dir with the same verdict
     } finally { b.unpersist(); () }
   }
 
@@ -1504,10 +1511,8 @@ object Streams {
   /** Merge every COMMITTED streamed partial for [from, until). */
   def mergeStreamedPartials(spark: SparkSession, partialsDir: String,
       from: String, until: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(partialsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedBatchDirs(fs, root)
+    val (fs, root) = rooted(spark, partialsDir)
+    val committed = listCommitted(fs, root, "batch_").map(_._2)
     require(committed.nonEmpty, s"no committed partials under $partialsDir")
     graft.engine.Incremental.mergePartialsFrame(
       spark.read.parquet(committed: _*)
@@ -1516,17 +1521,6 @@ object Streams {
   }
 
   // ------------------------------------ streaming assembly pipeline
-
-  /** Committed `batch_*` directories under `root`, sorted. */
-  private def committedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_") &&
-        fs.exists(new Path(st.getPath, "_GRAFT_COMMITTED")))
-      .map(_.getPath.toString).sorted
-  }
 
   /** One micro-batch through the INGEST half of the assembly pipeline
     * (engine.Assembly gone incremental — the r7 "streaming face" gap):
@@ -1552,30 +1546,24 @@ object Streams {
   def assemblyIngestBatch(batch: DataFrame, cleanDir: String, batchId: Long,
       benchGrams: DataFrame, n: Int = 5): Unit = {
     import graft.engine.{Assembly, Dedup}
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val root = new Path(cleanDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val target = new Path(root, f"batch_$batchId%06d")
-    val Marker = "_GRAFT_COMMITTED"
-    if (fs.exists(new Path(target, Marker))) return // replayed — already landed
-    if (fs.exists(target)) fs.delete(target, true) // crashed partial write
-    val normed = Dedup.fanOut(batch)
-      .withColumn("__norm", Dedup.normKey(col("text")))
-    val within = Dedup.firstWins(normed, Seq("__norm"), Seq("doc_id"))
-    val parts = committedBatchDirs(fs, root)
-    val novel =
-      if (parts.isEmpty) within
-      else within.join(
-        spark.read.option("mergeSchema", "true").parquet(parts: _*).select("__norm"),
-        Seq("__norm"), "left_anti")
-    val contaminated = Assembly.wordNgrams(novel, "text", "doc_id", n)
-      .join(broadcast(benchGrams), Seq("gram"), "left_semi")
-      .select("doc_id").distinct()
-    val clean = novel.join(contaminated, Seq("doc_id"), "left_anti")
-    clean.write.parquet(target.toString)
-    fs.create(new Path(target, Marker), true).close()
+    val (fs, root) = rooted(spark, cleanDir)
+    commitOnce(fs, root, f"batch_$batchId%06d") { target =>
+      val normed = Dedup.fanOut(batch)
+        .withColumn("__norm", Dedup.normKey(col("text")))
+      val within = Dedup.firstWins(normed, Seq("__norm"), Seq("doc_id"))
+      val parts = listCommitted(fs, root, "batch_").map(_._2)
+      val novel =
+        if (parts.isEmpty) within
+        else within.join(
+          spark.read.option("mergeSchema", "true").parquet(parts: _*).select("__norm"),
+          Seq("__norm"), "left_anti")
+      val contaminated = Assembly.wordNgrams(novel, "text", "doc_id", n)
+        .join(broadcast(benchGrams), Seq("gram"), "left_semi")
+        .select("doc_id").distinct()
+      val clean = novel.join(contaminated, Seq("doc_id"), "left_anti")
+      clean.write.parquet(target.toString)
+    }
   }
 
   /** Materialize the training mix from the accumulated clean corpus:
@@ -1591,10 +1579,8 @@ object Streams {
   def assembleSnapshot(spark: SparkSession, cleanDir: String,
       nShards: Int = 8): DataFrame = {
     import graft.engine.Assembly
-    import org.apache.hadoop.fs.Path
-    val root = new Path(cleanDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = committedBatchDirs(fs, root)
+    val (fs, root) = rooted(spark, cleanDir)
+    val parts = listCommitted(fs, root, "batch_").map(_._2)
     require(parts.nonEmpty, s"no committed assembly batches under $cleanDir")
     val corpus = spark.read.option("mergeSchema", "true").parquet(parts: _*)
     val balanced = Assembly.rebalanceUniform(corpus, "lang", "doc_id")
@@ -1641,7 +1627,8 @@ object Streams {
   /** One micro-batch's operational snapshot — the numbers a production
     * dedup-stream operator watches: throughput, batch latency, state-store
     * size (keys held within the watermark = the WindowStore analogue),
-    * eviction progress, and the current watermark.
+    * eviction progress, late rows dropped behind the watermark (summed
+    * over the state operators), and the current watermark.
     */
   final case class QueryMetrics(
       batchId: Long,
@@ -1653,9 +1640,10 @@ object Streams {
       stateRowsUpdated: Long,
       stateRowsRemoved: Long,
       stateMemoryBytes: Long,
+      droppedByWatermark: Long,
       watermark: Option[String])
 
-  private def toMetrics(p: org.apache.spark.sql.streaming.StreamingQueryProgress): QueryMetrics = {
+  private[graft] def toMetrics(p: org.apache.spark.sql.streaming.StreamingQueryProgress): QueryMetrics = {
     val ops = p.stateOperators.toIndexedSeq
     QueryMetrics(
       batchId = p.batchId,
@@ -1667,6 +1655,7 @@ object Streams {
       stateRowsUpdated = ops.map(_.numRowsUpdated).sum,
       stateRowsRemoved = ops.map(_.numRowsRemoved).sum,
       stateMemoryBytes = ops.map(_.memoryUsedBytes).sum,
+      droppedByWatermark = ops.map(_.numRowsDroppedByWatermark).sum,
       watermark = Option(p.eventTime.get("watermark")))
   }
 

@@ -1,10 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.engine.Sources
 import graft.streaming.Streams
 
 /** Fifth-decade gate for the streaming MinHash-LSH near-dup dedup
@@ -91,61 +88,21 @@ object NeardupStreamScale {
           org.apache.spark.sql.expressions.Window.orderBy("doc_id")).cast("long") *
           lit(tsStepMs)))
     val inputDir = s"$out/input"
-    val marker = new java.io.File(s"$inputDir/_GRAFT_NEARDUP_INPUT")
-    val markerContent = s"slices=$slices;src=$src;step=$tsStepMs"
-    if (!marker.isFile || java.nio.file.Files.readString(marker.toPath) != markerContent) {
-      Sources.deleteRecursively(new java.io.File(inputDir))
-      docs.repartitionByRange(slices, col("ts"), col("doc_id"))
-        .write.mode("overwrite").parquet(inputDir)
-      val parts = new java.io.File(inputDir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      val base = System.currentTimeMillis() - (parts.length + 4) * 4000L
-      parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-      java.nio.file.Files.writeString(marker.toPath, markerContent)
-    }
+    StreamScale.prepareTsOrderedInput(docs, inputDir, slices, "doc_id",
+      layout = s";src=$src;step=$tsStepMs")
 
     val retentionMs = 2L * 86400 * 1000
     val nDocs = docs.count()
     val schema = docs.schema
 
     // ---- one streamed run (optionally crash-injected) -------------------
-    def startRun(outDir: String, ckpt: String) = Streams.neardupStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 2)
-          .parquet(inputDir).as[Streams.StreamDoc],
-        delay = "1 day", retentionMs = retentionMs)
-      .toDF()
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-
-    /** Runs to completion on fresh out/ckpt dirs; returns (crashed,
-      * peakStateRows, peakStateMemBytes, droppedByWatermark).
-      */
-    def runStream(outDir: String, ckpt: String, crash: Boolean): (Boolean, Long, Long, Long) = {
-      Seq(outDir, ckpt).foreach(p => Sources.deleteRecursively(new java.io.File(p)))
-      val tracker = new StreamScale.ProgressTracker
-      spark.streams.addListener(tracker)
-      var crashed = false
-      try {
-        val crashAtRows = (nDocs * crashFrac).toLong
-        if (crash && crashAtRows > 0) {
-          val q1 = startRun(outDir, ckpt)
-          while (q1.isActive && tracker.rawIngested < crashAtRows) Thread.sleep(500)
-          crashed = q1.isActive
-          q1.stop()
-          tracker.fold(q1.recentProgress.toSeq)
-        }
-        val q = startRun(outDir, ckpt)
-        q.awaitTermination()
-        tracker.fold(q.recentProgress.toSeq)
-      } finally spark.streams.removeListener(tracker)
-      val ps = tracker.progresses
-      (crashed,
-        ps.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L),
-        ps.flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L),
-        ps.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
-    }
+    def runStream(outDir: String, ckpt: String, crash: Boolean): StreamScale.RunStats =
+      StreamScale.killAndRestart(spark,
+        () => Streams.neardupStream(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 2)
+            .parquet(inputDir).as[Streams.StreamDoc],
+          delay = "1 day", retentionMs = retentionMs).toDF(),
+        outDir, ckpt, if (crash) (nDocs * crashFrac).toLong else 0L)
 
     if (face == "parity") {
       // No timer can fire inside the compressed span, so the
@@ -199,56 +156,46 @@ object NeardupStreamScale {
         if (!dup) survivors += docId
       }
       val expected = survivors.toSeq.toDF("doc_id").localCheckpoint()
-      val nExpected = expected.count()
 
       val outDir = s"$out/survivors"
-      val (crashed, peakRows, peakMem, dropped) =
-        runStream(outDir, s"$out/ckpt", crash = true)
+      val st = runStream(outDir, s"$out/ckpt", crash = true)
 
-      val got = spark.read.parquet(outDir).select("doc_id")
-      val onlyS = got.exceptAll(expected).count()
-      val onlyB = expected.exceptAll(got).count()
-      val nGot = got.count()
+      val d = StreamScale.diff(spark.read.parquet(outDir).select("doc_id"), expected)
       val wall = (System.nanoTime() - t0) / 1e9
-      val parity = onlyS == 0 && onlyB == 0 && nGot == nExpected
-      val stateOk = peakRows < stateCap
+      val parity = d.equal
+      val stateOk = st.peakStateRows < stateCap
       println(s"""{"gate":"s_neardup_x970_parity","face":"parity","ts_step_ms":$tsStepMs,""" +
         s""""docs":$nDocs,"banded_rows":${nDocs * graft.engine.Dedup.NumBands},""" +
-        s""""crash_injected":$crashed,"survivors_stream":$nGot,"survivors_fold":$nExpected,""" +
-        s""""only_stream":$onlyS,"only_fold":$onlyB,"parity":$parity,""" +
-        s""""cross_copy_buckets":$crossCopyBuckets,"dropped_by_watermark":$dropped,""" +
-        s""""peak_state_rows":$peakRows,"peak_state_mem_mb":${peakMem / 1000000},"state_bounded":$stateOk,""" +
+        s""""crash_injected":${st.crashed},"survivors_stream":${d.nA},"survivors_fold":${d.nB},""" +
+        s""""only_stream":${d.onlyA},"only_fold":${d.onlyB},"parity":$parity,""" +
+        s""""cross_copy_buckets":$crossCopyBuckets,"dropped_by_watermark":${st.droppedByWatermark},""" +
+        s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},"state_bounded":$stateOk,""" +
         s""""wall_sec":${math.round(wall)}}""")
       spark.stop()
-      if (!parity || dropped != 0 || !stateOk) sys.exit(1)
+      if (!parity || st.droppedByWatermark != 0 || !stateOk) sys.exit(1)
     } else {
       // ---- selfparity: eviction active; clean vs crash-injected ---------
       val cleanDir = s"$out/survivors_clean"
       val crashDir = s"$out/survivors_crash"
-      val (_, peakA, memA, dropA) =
-        runStream(cleanDir, s"$out/ckpt_clean", crash = false)
-      val (crashed, peakB, memB, dropB) =
-        runStream(crashDir, s"$out/ckpt_crash", crash = true)
+      val clean = runStream(cleanDir, s"$out/ckpt_clean", crash = false)
+      val crash = runStream(crashDir, s"$out/ckpt_crash", crash = true)
 
-      val a = spark.read.parquet(cleanDir).select("doc_id")
-      val b = spark.read.parquet(crashDir).select("doc_id")
-      val onlyClean = a.exceptAll(b).count()
-      val onlyCrash = b.exceptAll(a).count()
-      val (nA, nB) = (a.count(), b.count())
+      val d = StreamScale.diff(spark.read.parquet(cleanDir).select("doc_id"),
+        spark.read.parquet(crashDir).select("doc_id"))
       val wall = (System.nanoTime() - t0) / 1e9
-      val parity = onlyClean == 0 && onlyCrash == 0 && nA == nB
-      val peakRows = math.max(peakA, peakB)
-      val stateOk = peakRows < stateCap
+      val parity = d.equal
+      val dropped = clean.droppedByWatermark + crash.droppedByWatermark
+      val stateOk = math.max(clean.peakStateRows, crash.peakStateRows) < stateCap
       println(s"""{"gate":"s_neardup_x970_selfparity","face":"selfparity","ts_step_ms":$tsStepMs,""" +
         s""""docs":$nDocs,"banded_rows":${nDocs * graft.engine.Dedup.NumBands},""" +
-        s""""crash_injected":$crashed,"survivors_clean":$nA,"survivors_crash":$nB,""" +
-        s""""only_clean":$onlyClean,"only_crash":$onlyCrash,"parity":$parity,""" +
-        s""""dropped_by_watermark":${dropA + dropB},""" +
-        s""""peak_state_rows_clean":$peakA,"peak_state_rows_crash":$peakB,""" +
-        s""""peak_state_mem_mb":${math.max(memA, memB) / 1000000},"state_bounded":$stateOk,""" +
+        s""""crash_injected":${crash.crashed},"survivors_clean":${d.nA},"survivors_crash":${d.nB},""" +
+        s""""only_clean":${d.onlyA},"only_crash":${d.onlyB},"parity":$parity,""" +
+        s""""dropped_by_watermark":$dropped,""" +
+        s""""peak_state_rows_clean":${clean.peakStateRows},"peak_state_rows_crash":${crash.peakStateRows},""" +
+        s""""peak_state_mem_mb":${math.max(clean.peakStateBytes, crash.peakStateBytes) / 1000000},"state_bounded":$stateOk,""" +
         s""""wall_sec":${math.round(wall)}}""")
       spark.stop()
-      if (!parity || !crashed || dropA + dropB != 0 || !stateOk) sys.exit(1)
+      if (!parity || !crash.crashed || dropped != 0 || !stateOk) sys.exit(1)
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.engine.{Dedup, Tables}
 import graft.streaming.{ReplaySource, Streams}
@@ -51,62 +50,30 @@ object ReplayScale {
         s"segments=${staged.size} rows=$total")
     }
 
-    val outDir = s"$out/dedup"; val ckpt = s"$out/ckpt_dedup"
-    Seq(outDir, ckpt).foreach(p =>
-      StreamScale.Sources.deleteRecursively(new java.io.File(p)))
-
-    val tracker = new StreamScale.ProgressTracker
-    spark.streams.addListener(tracker)
+    val outDir = s"$out/dedup"
     val t0 = System.nanoTime()
-    def start() = Streams.dedupWithinWatermark(
-        Streams.events(spark, Streams.ReplayStreamSource(logDir, Some(2))),
-        "40 days", Seq("user_id", "event_type"))
-      .select(col("user_id"), col("event_type"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    val crashWanted = crashFrac > 0
-    var crashed = false
-    var rowsBeforeKill = 0L
-    try {
-      val killAt = (total * crashFrac).toLong
-      if (killAt > 0) {
-        val q1 = start()
-        while (q1.isActive && tracker.rawIngested < killAt) Thread.sleep(500)
-        crashed = q1.isActive
-        q1.stop()
-        tracker.fold(q1.recentProgress.toSeq)
-        rowsBeforeKill = tracker.rawIngested
-      }
-      val q = start()
-      q.awaitTermination()
-      tracker.fold(q.recentProgress.toSeq)
-    } finally spark.streams.removeListener(tracker)
+    val st = StreamScale.killAndRestart(spark,
+      () => Streams.dedupWithinWatermark(
+          Streams.events(spark, Streams.ReplayStreamSource(logDir, Some(2))),
+          "40 days", Seq("user_id", "event_type"))
+        .select(col("user_id"), col("event_type")),
+      outDir, s"$out/ckpt_dedup", (total * crashFrac).toLong)
 
-    val progresses = tracker.progresses
-    val peakRows = progresses.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-    val peakMem = progresses.flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L)
-    val dropped = progresses.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    val batches = progresses.count(_.numInputRows > 0)
-
-    val streamed = spark.read.parquet(outDir)
     val batch = Dedup.queries("q_dedup_first_wins")(spark, src)
       .select(col("user_id"), col("event_type")).distinct().localCheckpoint()
-    val onlyS = streamed.exceptAll(batch).count()
-    val onlyB = batch.exceptAll(streamed).count()
-    val (nS, nB) = (streamed.count(), batch.count())
+    val d = StreamScale.diff(spark.read.parquet(outDir), batch)
     val wall = (System.nanoTime() - t0) / 1e9
     // A crash is required only when one was requested (REPLAY_CRASH_FRAC=0
     // must be able to pass); a requested-but-missed kill (stream drained
     // before the poll reached killAt) is distinguishable from a parity
     // break via crash_missed.
-    val crashMissed = crashWanted && !crashed
-    val pass = onlyS == 0 && onlyB == 0 && nS == nB && dropped == 0 && !crashMissed
+    val crashMissed = crashFrac > 0 && !st.crashed
+    val pass = d.equal && st.droppedByWatermark == 0 && !crashMissed
     println(s"""{"replay_scale":{"src":"$src","segments":$segments,"rows":$total,""" +
-      s""""crash_injected":$crashed,"crash_missed":$crashMissed,"rows_before_kill":$rowsBeforeKill,""" +
-      s""""survivors_stream":$nS,"survivors_batch":$nB,"only_stream":$onlyS,"only_batch":$onlyB,""" +
-      s""""peak_state_rows":$peakRows,"peak_state_mem_mb":${peakMem / 1000000},""" +
-      s""""dropped_by_watermark":$dropped,"batches":$batches,""" +
+      s""""crash_injected":${st.crashed},"crash_missed":$crashMissed,"rows_before_kill":${st.rowsBeforeKill},""" +
+      s""""survivors_stream":${d.nA},"survivors_batch":${d.nB},"only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
+      s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +
+      s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},""" +
       s""""wall_sec":${f"$wall%.1f"},"pass":$pass}}""")
     spark.stop()
     if (!pass) sys.exit(1)

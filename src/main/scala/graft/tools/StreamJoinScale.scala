@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.engine.Tables
 import graft.streaming.Streams
@@ -80,7 +79,6 @@ object StreamJoinScale {
     val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
     val evCount = ev.count()
     val crashAtRows = (evCount * crashFrac).toLong
-    val crashWanted = crashFrac > 0
 
     val inputDir = s"$out/input"
     // THREE sentinel tail files: with maxFilesPerTrigger=2, two tails can
@@ -90,11 +88,11 @@ object StreamJoinScale {
     // guarantee at least one DATA batch strictly after the batch that
     // raised the watermark, at any slices/maxFiles alignment; the
     // explicit noDataMicroBatches conf above is belt and braces.
-    StreamScale.prepareTsOrderedInput(spark, ev, inputDir, slices, maxTs,
-      Seq(Seq((-1L, -1L, "purchase"), (-2L, -1L, "click")),
-        Seq((-3L, -1L, "purchase"), (-4L, -1L, "click")),
-        Seq((-5L, -1L, "purchase"), (-6L, -1L, "click"))),
-      s"$out/_sentinel")
+    StreamScale.prepareTsOrderedInput(ev, inputDir, slices, "event_id",
+      StreamScale.eventSentinels(spark, maxTs,
+        Seq(Seq((-1L, -1L, "purchase"), (-2L, -1L, "click")),
+          Seq((-3L, -1L, "purchase"), (-4L, -1L, "click")),
+          Seq((-5L, -1L, "purchase"), (-6L, -1L, "click")))))
 
     val schema = ev.schema
     def stream(): DataFrame = spark.readStream.schema(schema)
@@ -124,52 +122,21 @@ object StreamJoinScale {
     val nonSentinel = (col("p_id").isNull || col("p_id") >= 0L) &&
       (col("c_id").isNull || col("c_id") >= 0L)
 
-    case class Face(key: String, parity: Boolean, stateBounded: Boolean,
-        rowsStream: Long, rowsBatch: Long, onlyS: Long, onlyB: Long,
-        nullLeft: Long, nullRows: Long, peakRows: Long, peakMemMb: Long, dropped: Long,
-        batches: Long, crashed: Boolean, rowsBeforeKill: Long, wallSec: Double)
+    case class Face(key: String, diff: StreamScale.Diff, run: StreamScale.RunStats,
+        nullLeft: Long, nullRows: Long, wallSec: Double) {
+      def stateBounded: Boolean = run.peakStateRows < evCount / 10
+    }
 
     def runFace(key: String, joinType: String): Face = {
       val t0 = System.nanoTime()
-      val outDir = s"$out/$key"; val ckpt = s"$out/ckpt_$key"
-      Seq(outDir, ckpt).foreach(p =>
-        StreamScale.Sources.deleteRecursively(new java.io.File(p)))
-      def start() = joined(stream(), joinType).writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      val tracker = new StreamScale.ProgressTracker
-      spark.streams.addListener(tracker)
-      var crashed = false
-      var rowsBeforeKill = 0L
-      try {
-        if (crashAtRows > 0) {
-          val q1 = start()
-          while (q1.isActive && tracker.rawIngested < crashAtRows) Thread.sleep(500)
-          crashed = q1.isActive
-          q1.stop()
-          tracker.fold(q1.recentProgress.toSeq)
-          rowsBeforeKill = tracker.rawIngested
-        }
-        val q = start()
-        q.awaitTermination()
-        tracker.fold(q.recentProgress.toSeq)
-      } finally spark.streams.removeListener(tracker)
-      val progresses = tracker.progresses
-      val peakRows = progresses.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-      val peakMem = progresses.flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L)
-      val dropped = progresses.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      val batches = progresses.count(_.numInputRows > 0).toLong
+      val outDir = s"$out/$key"
+      val st = StreamScale.killAndRestart(spark, () => joined(stream(), joinType),
+        outDir, s"$out/ckpt_$key", crashAtRows)
       val streamed = spark.read.parquet(outDir).where(nonSentinel).localCheckpoint()
-      val batch = batchTwin(joinType).localCheckpoint()
-      val onlyS = streamed.exceptAll(batch).count()
-      val onlyB = batch.exceptAll(streamed).count()
-      val (nS, nB) = (streamed.count(), batch.count())
+      val d = StreamScale.diff(streamed, batchTwin(joinType).localCheckpoint())
       val nullLeft = streamed.where(col("p_id").isNull).count()
       val nullRows = streamed.where(col("c_id").isNull).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Face(key, onlyS == 0 && onlyB == 0 && nS == nB,
-        peakRows < evCount / 10, nS, nB, onlyS, onlyB, nullLeft, nullRows,
-        peakRows, peakMem / 1000000, dropped, batches, crashed, rowsBeforeKill, wall)
+      Face(key, d, st, nullLeft, nullRows, (System.nanoTime() - t0) / 1e9)
     }
 
     // r17 (r16 verdict item #2): the remaining outer faces join the gate.
@@ -183,13 +150,14 @@ object StreamJoinScale {
     val faces = faceDefs.filter(fd => wanted.forall(_.contains(fd._2)))
       .map { case (k, jt) => runFace(k, jt) }
     faces.foreach { f =>
-      println(s"""{"key":"${f.key}","parity":${f.parity},"state_bounded":${f.stateBounded},""" +
-        s""""rows_stream":${f.rowsStream},"rows_batch":${f.rowsBatch},""" +
-        s""""only_stream":${f.onlyS},"only_batch":${f.onlyB},""" +
+      val (d, st) = (f.diff, f.run)
+      println(s"""{"key":"${f.key}","parity":${d.equal},"state_bounded":${f.stateBounded},""" +
+        s""""rows_stream":${d.nA},"rows_batch":${d.nB},""" +
+        s""""only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
         s""""null_padded_left_rows":${f.nullLeft},"null_padded_rows":${f.nullRows},""" +
-        s""""peak_state_rows":${f.peakRows},"peak_state_mem_mb":${f.peakMemMb},""" +
-        s""""dropped_by_watermark":${f.dropped},"batches":${f.batches},""" +
-        s""""crash_injected":${f.crashed},"rows_before_kill":${f.rowsBeforeKill},""" +
+        s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +
+        s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},""" +
+        s""""crash_injected":${st.crashed},"rows_before_kill":${st.rowsBeforeKill},""" +
         s""""wall_sec":${f"${f.wallSec}%.1f"}}""")
     }
     // Cross-face closure over the MATCHED core: every outer face minus
@@ -200,36 +168,34 @@ object StreamJoinScale {
     val ranKeys = faces.map(_.key).toSet
     def sink(key: String): DataFrame =
       spark.read.parquet(s"$out/$key").where(nonSentinel).localCheckpoint()
-    def multisetEq(a: DataFrame, b: DataFrame): Boolean =
-      a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
     val crossChecks: Seq[(String, Boolean)] =
       if (!ranKeys.contains("ssjoin_inner")) Seq.empty
       else {
         val inner = sink("ssjoin_inner")
         def matchedEqInner(key: String): Option[(String, Boolean)] =
           if (!ranKeys.contains(key)) None
-          else Some(s"${key}_matched_equals_inner" -> multisetEq(
-            sink(key).where(col("p_id").isNotNull && col("c_id").isNotNull), inner))
+          else Some(s"${key}_matched_equals_inner" -> StreamScale.diff(
+            sink(key).where(col("p_id").isNotNull && col("c_id").isNotNull), inner).equal)
         val sides: Seq[(String, Boolean)] =
           if (!ranKeys.contains("ssjoin_full_outer")) Seq.empty
           else {
             val full = sink("ssjoin_full_outer")
             val leftNulls = Option.when(ranKeys.contains("ssjoin_left_outer"))(
-              "full_right_nulls_equal_left_outer" -> multisetEq(
+              "full_right_nulls_equal_left_outer" -> StreamScale.diff(
                 full.where(col("c_id").isNull),
-                sink("ssjoin_left_outer").where(col("c_id").isNull)))
+                sink("ssjoin_left_outer").where(col("c_id").isNull)).equal)
             val rightNulls = Option.when(ranKeys.contains("ssjoin_right_outer"))(
-              "full_left_nulls_equal_right_outer" -> multisetEq(
+              "full_left_nulls_equal_right_outer" -> StreamScale.diff(
                 full.where(col("p_id").isNull),
-                sink("ssjoin_right_outer").where(col("p_id").isNull)))
+                sink("ssjoin_right_outer").where(col("p_id").isNull)).equal)
             Seq(leftNulls, rightNulls).flatten
           }
         Seq("ssjoin_left_outer", "ssjoin_right_outer", "ssjoin_full_outer")
           .flatMap(matchedEqInner) ++ sides
       }
     val crossOk = crossChecks.forall(_._2)
-    val crashMissed = crashWanted && faces.exists(!_.crashed)
-    val pass = faces.forall(f => f.parity && f.stateBounded && f.dropped == 0) &&
+    val crashMissed = crashFrac > 0 && faces.exists(!_.run.crashed)
+    val pass = faces.forall(f => f.diff.equal && f.stateBounded && f.run.droppedByWatermark == 0) &&
       crossOk && !crashMissed
     val crossJson = crossChecks.map { case (k, v) => s""""$k":$v""" }.mkString(",")
     println(s"""{"stream_join":{"src":"$src","rows":$evCount,"slices":$slices,""" +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.engine.{Tables, Windowed, Dedup}
+import graft.engine.{Dedup, Sources, Tables, Windowed}
 import graft.streaming.Streams
 
 /** Fourth-decade STREAMING gate (round-12 verdict item #5): run the
@@ -50,10 +50,7 @@ import graft.streaming.Streams
   */
 object StreamScale {
 
-  case class Result(key: String, parity: Boolean, rowsStream: Long,
-      rowsBatch: Long, onlyStream: Long, onlyBatch: Long,
-      peakStateRows: Long, peakStateMemMb: Long, dropped: Long,
-      batches: Long, wallSec: Double)
+  case class Result(key: String, diff: Diff, run: RunStats, wallSec: Double)
 
   /** Progress tracking via listener (r14 ADVICE): `recentProgress` is a
     * ring buffer capped at spark.sql.streaming.numRecentProgressUpdates
@@ -91,43 +88,86 @@ object StreamScale {
     }
   }
 
-  /** Stage `ev` as a ts-range-partitioned ingest directory whose file
-    * mtimes force the file source to replay near-chronologically, plus
-    * SENTINEL tail files — each inner seq of `sentinelFiles` becomes one
-    * parquet file of (event_id, user_id, event_type) rows placed
-    * `7·(i+1)` days past `maxTs`, mtime'd after every real slice (and
-    * after each other). One sentinel file flushes windowed aggregates;
-    * stream-stream OUTER joins need a tail BATCH strictly after the one
-    * that raised the watermark, because a raised watermark is only
-    * APPLIED (state evicted, nulls emitted) while processing a later
-    * batch — and the file source coalesces up to maxFilesPerTrigger tail
-    * FILES into one batch, so callers must stage enough tail files that
-    * one lands in a later batch at their trigger setting (StreamJoinScale
-    * stages three for maxFilesPerTrigger = 2). Idempotent via the
-    * `_GRAFT_STREAM_INPUT` marker, which records slice and sentinel
-    * counts — a layout change rebuilds instead of reusing stale input.
+  /** What one [[killAndRestart]] run observed. Peaks and drops come from
+    * [[Streams.QueryMetrics]], one progress per batch id.
     */
-  def prepareTsOrderedInput(spark: SparkSession, ev: DataFrame, inputDir: String,
-      slices: Int, maxTs: java.sql.Timestamp,
-      sentinelFiles: Seq[Seq[(Long, Long, String)]], scratchDir: String): Unit = {
-    // The marker records the LAYOUT (slice and sentinel-file counts), not
-    // just existence: rerunning against the same OUT dir with a different
-    // STREAM_SLICES/sentinel staging must rebuild, not silently reuse the
-    // stale layout (r16 ADVICE low).
-    val markerContent = s"slices=$slices;sentinels=${sentinelFiles.length}"
-    val markerFile = new java.io.File(s"$inputDir/_GRAFT_STREAM_INPUT")
-    if (markerFile.isFile) {
-      if (java.nio.file.Files.readString(markerFile.toPath) == markerContent) return
-      Sources.deleteRecursively(new java.io.File(inputDir))
-    }
-    import spark.implicits._
-    ev.repartitionByRange(slices, col("ts"), col("event_id"))
-      .write.mode("overwrite").parquet(inputDir)
-    val sentTargets = sentinelFiles.zipWithIndex.map { case (rows, i) =>
-      val ts = new java.sql.Timestamp(maxTs.getTime + 7L * (i + 1) * 86400 * 1000)
-      rows.map { case (eid, uid, etype) => (eid, uid, etype, ts, 0.0) }
-        .toDF("event_id", "user_id", "event_type", "ts", "value")
-        .coalesce(1).write.mode("overwrite").parquet(scratchDir)
+  final case class RunStats(crashed: Boolean, rowsBeforeKill: Long, peakStateRows: Long,
+      peakStateBytes: Long, droppedByWatermark: Long, batches: Long)
+
+  /** The scale gates' exactly-once seam: stream `query()` into a parquet
+    * sink on fresh `outDir`/`ckpt` under Trigger.AvailableNow; once the
+    * listener has counted `crashAtRows` input rows (0 = no kill) stop the
+    * query, restart it on the SAME checkpoint + sink and drain it. The
+    * sink's commit log must keep the result exactly-once across the kill —
+    * the caller's parity check is the proof. `crashed` is false when the
+    * stream finished before the kill point (the poll runs every 500 ms).
+    */
+  def killAndRestart(spark: SparkSession, query: () => DataFrame, outDir: String,
+      ckpt: String, crashAtRows: Long): RunStats = {
+    Seq(outDir, ckpt).foreach(p => Sources.deleteRecursively(new java.io.File(p)))
+    def start() = Streams.start(query(), Streams.ParquetStreamSink(outDir, ckpt),
+      trigger = Some(Trigger.AvailableNow()))
+    val tracker = new ProgressTracker
+    spark.streams.addListener(tracker)
+    var crashed = false
+    var rowsBeforeKill = 0L
+    try {
+      if (crashAtRows > 0) {
+        val q1 = start()
+        while (q1.isActive && tracker.rawIngested < crashAtRows) Thread.sleep(500)
+        crashed = q1.isActive
+        q1.stop()
+        tracker.fold(q1.recentProgress.toSeq)
+        rowsBeforeKill = tracker.rawIngested
+      }
+      val q = start()
+      q.awaitTermination()
+      tracker.fold(q.recentProgress.toSeq)
+    } finally spark.streams.removeListener(tracker)
+    val ms = tracker.progresses.map(Streams.toMetrics)
+    RunStats(crashed, rowsBeforeKill, ms.map(_.stateRows).maxOption.getOrElse(0L),
+      ms.map(_.stateMemoryBytes).maxOption.getOrElse(0L), ms.map(_.droppedByWatermark).sum,
+      ms.count(_.numInputRows > 0).toLong)
+  }
+
+  /** Two-way multiset difference: rows only in `a`, rows only in `b`
+    * (exceptAll each way) and both sizes.
+    */
+  final case class Diff(onlyA: Long, onlyB: Long, nA: Long, nB: Long) {
+    def equal: Boolean = onlyA == 0 && onlyB == 0 && nA == nB
+  }
+
+  def diff(a: DataFrame, b: DataFrame): Diff =
+    Diff(a.exceptAll(b).count(), b.exceptAll(a).count(), a.count(), b.count())
+
+  /** Stage `frame` (which has a `ts` column) as a ts-range-partitioned
+    * ingest directory whose file mtimes force the file source to replay
+    * near-chronologically (`tieBreak` orders rows within one ts), plus
+    * `tails` — each becomes one `zz-sentinel-NN.parquet` file, mtime'd
+    * after every slice and after each other. One sentinel file flushes
+    * windowed aggregates; stream-stream OUTER joins need a tail BATCH
+    * strictly after the one that raised the watermark, because a raised
+    * watermark is only APPLIED (state evicted, nulls emitted) while
+    * processing a later batch — and the file source coalesces up to
+    * maxFilesPerTrigger tail FILES into one batch, so callers must stage
+    * enough tail files that one lands in a later batch at their trigger
+    * setting (StreamJoinScale stages three for maxFilesPerTrigger = 2).
+    * Idempotent via the `_GRAFT_STREAM_INPUT` marker, which records the
+    * LAYOUT — slice and sentinel counts plus the caller's `layout`
+    * suffix — so a rerun with a different layout rebuilds instead of
+    * silently reusing stale input.
+    */
+  def prepareTsOrderedInput(frame: DataFrame, inputDir: String, slices: Int,
+      tieBreak: String, tails: Seq[DataFrame] = Nil, layout: String = ""): Unit = {
+    val markerContent = s"slices=$slices;sentinels=${tails.length}$layout"
+    val marker = java.nio.file.Paths.get(inputDir, "_GRAFT_STREAM_INPUT")
+    if (java.nio.file.Files.isRegularFile(marker) &&
+      java.nio.file.Files.readString(marker) == markerContent) return
+    Sources.deleteRecursively(new java.io.File(inputDir))
+    frame.repartitionByRange(slices, col("ts"), col(tieBreak)).write.parquet(inputDir)
+    val scratchDir = s"${inputDir}_sentinel"
+    val sentTargets = tails.zipWithIndex.map { case (tail, i) =>
+      tail.coalesce(1).write.mode("overwrite").parquet(scratchDir)
       val part = new java.io.File(scratchDir).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
       val target = new java.io.File(inputDir, f"zz-sentinel-$i%02d.parquet")
@@ -145,8 +185,20 @@ object StreamScale {
     sentTargets.zipWithIndex.foreach { case (f, i) =>
       f.setLastModified(base + (parts.length + 2 * (i + 1)) * 2000L)
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(inputDir, "_GRAFT_STREAM_INPUT"), markerContent)
+    java.nio.file.Files.writeString(marker, markerContent)
+  }
+
+  /** Sentinel tails for an events stream: file i holds its (event_id,
+    * user_id, event_type) rows at `7·(i+1)` days past `maxTs`, value 0.
+    */
+  def eventSentinels(spark: SparkSession, maxTs: java.sql.Timestamp,
+      files: Seq[Seq[(Long, Long, String)]]): Seq[DataFrame] = {
+    import spark.implicits._
+    files.zipWithIndex.map { case (rows, i) =>
+      val ts = new java.sql.Timestamp(maxTs.getTime + 7L * (i + 1) * 86400 * 1000)
+      rows.map { case (eid, uid, etype) => (eid, uid, etype, ts, 0.0) }
+        .toDF("event_id", "user_id", "event_type", "ts", "value")
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -172,8 +224,8 @@ object StreamScale {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts"), col("value"))
     val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    prepareTsOrderedInput(spark, ev, inputDir, slices, maxTs,
-      Seq(Seq((-1L, -1L, "sentinel"))), s"$out/_sentinel")
+    prepareTsOrderedInput(ev, inputDir, slices, "event_id",
+      eventSentinels(spark, maxTs, Seq(Seq((-1L, -1L, "sentinel")))))
 
     val schema = ev.schema
     def stream(): DataFrame = spark.readStream.schema(schema)
@@ -188,50 +240,19 @@ object StreamScale {
         crashAtRows: Long = globalCrashRows): Result = {
       val t0 = System.nanoTime()
       val outDir = s"$out/$key"
-      val ckpt = s"$out/ckpt_$key"
-      Seq(outDir, ckpt).foreach(p => Sources.deleteRecursively(new java.io.File(p)))
-      def start() = streaming(stream()).writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      val tracker = new ProgressTracker
-      spark.streams.addListener(tracker)
-      try {
-        if (crashAtRows > 0) {
-          // Crash injection: kill the query once ≥ crashAtRows input rows
-          // are ingested (mid-stream, ≈ half the 97M events), then restart
-          // on the SAME checkpoint + sink. The file sink's commit log must
-          // keep the final result exactly-once — parity below is the proof.
-          // Ingestion is counted by the listener (every batch), not the
-          // capped recentProgress ring buffer (r14 ADVICE).
-          val q1 = start()
-          while (q1.isActive && tracker.rawIngested < crashAtRows) Thread.sleep(500)
-          val crashed = q1.isActive // false ⇒ the stream finished before the kill point
-          q1.stop()
-          tracker.fold(q1.recentProgress.toSeq)
-          println(s"""{"key":"$key","crash_injected":$crashed,"rows_before_kill":${tracker.rawIngested}}""")
-        }
-        val q = start()
-        q.awaitTermination()
-        tracker.fold(q.recentProgress.toSeq)
-      } finally spark.streams.removeListener(tracker)
-      // One progress per batchId (replays overwrite — no drop-counter
-      // double count across the restart), every batch present.
-      val progresses = tracker.progresses
-      val peakRows = progresses.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-      val peakMem = progresses.flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L)
-      val dropped = progresses.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      val nBatches = progresses.count(_.numInputRows > 0).toLong
+      // Crash injection (crashAtRows > 0, ≈ half the events): the kill
+      // point is counted by the listener on every batch, not the capped
+      // recentProgress ring buffer (r14 ADVICE).
+      val st = killAndRestart(spark, () => streaming(stream()), outDir, s"$out/ckpt_$key",
+        crashAtRows)
+      if (crashAtRows > 0)
+        println(s"""{"key":"$key","crash_injected":${st.crashed},"rows_before_kill":${st.rowsBeforeKill}}""")
       // Sentinel rows out of both sides (its lone window / user −1) —
       // the batch twin sees no sentinel, so only symmetric real rows
       // remain on both sides.
-      val sFiltered = dropSentinel(spark.read.parquet(outDir)).selectExpr(project: _*)
-      val bFiltered = batchTwin().selectExpr(project: _*)
-      val onlyS = sFiltered.exceptAll(bFiltered).count()
-      val onlyB = bFiltered.exceptAll(sFiltered).count()
-      val (nS, nB) = (sFiltered.count(), bFiltered.count())
-      val wall = (System.nanoTime() - t0) / 1e9
-      Result(key, onlyS == 0 && onlyB == 0 && nS == nB, nS, nB, onlyS, onlyB,
-        peakRows, peakMem / 1000000, dropped, nBatches, wall)
+      val d = diff(dropSentinel(spark.read.parquet(outDir)).selectExpr(project: _*),
+        batchTwin().selectExpr(project: _*))
+      Result(key, d, st, (System.nanoTime() - t0) / 1e9)
     }
 
     val results = scala.collection.mutable.ArrayBuffer[Result]()
@@ -286,36 +307,16 @@ object StreamScale {
     // shorter). dropped stays 0 (ordered slices); peak state ≪ keys×days.
     if (wanted("s_dedup_evict_x97")) {
       val t0 = System.nanoTime()
-      val outDir = s"$out/s_dedup_evict_x97"; val ckpt = s"$out/ckpt_s_dedup_evict_x97"
-      Seq(outDir, ckpt).foreach(p => Sources.deleteRecursively(new java.io.File(p)))
-      val tracker = new ProgressTracker
-      spark.streams.addListener(tracker)
-      try {
-        def start() = Streams.dedupWithinWatermark(stream(), "24 hours", Seq("user_id", "event_type"))
-          .select(col("user_id"), col("event_type"), col("ts"))
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        if (globalCrashRows > 0) {
-          // Same kill seam as run(): the eviction band below must hold
-          // ACROSS the restart — replayed emissions are swallowed by the
-          // file-sink commit log, recovered state keeps suppressing.
-          val q1 = start()
-          while (q1.isActive && tracker.rawIngested < globalCrashRows) Thread.sleep(500)
-          val crashed = q1.isActive
-          q1.stop()
-          tracker.fold(q1.recentProgress.toSeq)
-          println(s"""{"key":"s_dedup_evict_x97","crash_injected":$crashed,"rows_before_kill":${tracker.rawIngested}}""")
-        }
-        val q = start()
-        q.awaitTermination()
-        tracker.fold(q.recentProgress.toSeq)
-      } finally spark.streams.removeListener(tracker)
-      val progresses = tracker.progresses
-      val peakRows = progresses.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
-      val peakMem = progresses.flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L)
-      val dropped = progresses.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      val nBatches = progresses.count(_.numInputRows > 0).toLong
+      val outDir = s"$out/s_dedup_evict_x97"
+      // Same kill seam as run(): the eviction band below must hold
+      // ACROSS the restart — replayed emissions are swallowed by the
+      // file-sink commit log, recovered state keeps suppressing.
+      val st = killAndRestart(spark,
+        () => Streams.dedupWithinWatermark(stream(), "24 hours", Seq("user_id", "event_type"))
+          .select(col("user_id"), col("event_type"), col("ts")),
+        outDir, s"$out/ckpt_s_dedup_evict_x97", globalCrashRows)
+      if (globalCrashRows > 0)
+        println(s"""{"key":"s_dedup_evict_x97","crash_injected":${st.crashed},"rows_before_kill":${st.rowsBeforeKill}}""")
       val nStream = spark.read.parquet(outDir).where(col("user_id") =!= -1L).count()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"), col("event_type"))
@@ -325,12 +326,12 @@ object StreamScale {
           unix_micros(col("ts")) - unix_micros(col("prev")) > 24L * 3600 * 1000000)
         .count()
       val nKeys = ev.select(col("user_id"), col("event_type")).distinct().count()
-      val ok = nStream >= nKeys && nStream <= gapIdeal && dropped == 0
+      val ok = nStream >= nKeys && nStream <= gapIdeal && st.droppedByWatermark == 0
       println(s"""{"key":"s_dedup_evict_x97","band":"keys <= emissions <= gap_ideal",""" +
         s""""parity":$ok,"rows_stream":$nStream,"keys_lower_bound":$nKeys,""" +
-        s""""gap_ideal_upper_bound":$gapIdeal,"peak_state_rows":$peakRows,""" +
-        s""""peak_state_mem_mb":${peakMem / 1000000},"dropped_by_watermark":$dropped,""" +
-        s""""batches":$nBatches,"wall_sec":${f"${(System.nanoTime() - t0) / 1e9}%.1f"}}""")
+        s""""gap_ideal_upper_bound":$gapIdeal,"peak_state_rows":${st.peakStateRows},""" +
+        s""""peak_state_mem_mb":${st.peakStateBytes / 1000000},"dropped_by_watermark":${st.droppedByWatermark},""" +
+        s""""batches":${st.batches},"wall_sec":${f"${(System.nanoTime() - t0) / 1e9}%.1f"}}""")
       if (!ok) evictFail = true
     }
 
@@ -440,22 +441,15 @@ object StreamScale {
       df => df.where(col("user_id") =!= -1L),
       crashAtRows = evCount / 2)
 
-    results.foreach { r =>
-      println(s"""{"key":"${r.key}","parity":${r.parity},"rows_stream":${r.rowsStream},""" +
-        s""""rows_batch":${r.rowsBatch},"only_stream":${r.onlyStream},"only_batch":${r.onlyBatch},""" +
-        s""""peak_state_rows":${r.peakStateRows},"peak_state_mem_mb":${r.peakStateMemMb},""" +
-        s""""dropped_by_watermark":${r.dropped},"batches":${r.batches},"wall_sec":${f"${r.wallSec}%.1f"}}""")
+    results.foreach { case Result(key, d, st, wallSec) =>
+      println(s"""{"key":"$key","parity":${d.equal},"rows_stream":${d.nA},""" +
+        s""""rows_batch":${d.nB},"only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
+        s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +
+        s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},"wall_sec":${f"$wallSec%.1f"}}""")
     }
-    val pass = results.forall(r => r.parity && r.dropped == 0) && !evictFail
+    val pass = results.forall(r => r.diff.equal && r.run.droppedByWatermark == 0) && !evictFail
     println(s"""{"stream_scale":{"src":"$src","slices":$slices,"pass":$pass}}""")
     spark.stop()
     if (!pass) System.exit(1)
-  }
-
-  private[tools] object Sources {
-    def deleteRecursively(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-      f.delete()
-    }
   }
 }

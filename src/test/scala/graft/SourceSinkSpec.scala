@@ -115,6 +115,15 @@ class SourceSinkSpec extends AnyFunSuite {
       assert(all.map(_.stateRows).max == distinctKeys,
         s"state rows ${all.map(_.stateRows).max} vs $distinctKeys keys")
       assert(m.batchDurationMs >= 0 && m.stateMemoryBytes > 0)
+      assert(all.map(_.droppedByWatermark).sum == 0L, s"in-order input dropped rows: $all")
+      // A later file carries a row ten years behind the watermark: the
+      // dedup operator drops it and the metric counts it.
+      Tables.events(spark, TestSpark.sfDir).limit(1)
+        .withColumn("ts", col("ts") - expr("INTERVAL 3650 DAYS"))
+        .write.mode("append").parquet(s"$dir/in")
+      q.processAllAvailable()
+      assert(Streams.recentMetrics(q).map(_.droppedByWatermark).sum >= 1L,
+        s"late row not counted: ${Streams.recentMetrics(q)}")
     } finally q.stop()
   }
 

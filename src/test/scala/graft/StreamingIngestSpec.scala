@@ -49,22 +49,40 @@ class StreamingIngestSpec extends AnyFunSuite {
   }
 
   test("a partial batch dir (no commit marker) is rewritten on replay, not skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-partial").toString
-    // Fake a crashed write: batch_000000 exists with a stray data file but
-    // no commit marker — the replay must delete and rewrite it.
-    val partial = new java.io.File(s"$dir/corpus/batch_000000")
-    partial.mkdirs()
-    java.nio.file.Files.writeString(partial.toPath.resolve("part-junk.parquet"), "not parquet")
-    val batch = Seq((1L, "alpha beta gamma delta epsilon", ts(0)))
-      .toDF("doc_id", "text", "ts")
-    Streams.ingestBatch(batch, s"$dir/corpus", batchId = 0L)
-    assert(corpusIds(s"$dir/corpus") == Set(1L))
-    assert(new java.io.File(partial, "_GRAFT_COMMITTED").exists())
-    assert(!new java.io.File(partial, "part-junk.parquet").exists())
-    // Second replay with the marker present is now a true no-op.
-    val replay = Seq((9L, "must not land", ts(1))).toDF("doc_id", "text", "ts")
-    Streams.ingestBatch(replay, s"$dir/corpus", batchId = 0L)
-    assert(corpusIds(s"$dir/corpus") == Set(1L))
+    // Every marker-committed writer, fed a one-row batch tagged `id`, and
+    // the tags committed under its directory.
+    val writers: Seq[(String, String, (Long, String) => Unit, String => Set[Long])] = Seq(
+      ("ingestBatch", "batch_000000",
+        (id, dir) => Streams.ingestBatch(
+          Seq((id, "alpha beta gamma delta epsilon", ts(0))).toDF("doc_id", "text", "ts"),
+          dir, batchId = 0L),
+        corpusIds),
+      ("partialsBatch", "batch_000000",
+        (id, dir) => Streams.partialsBatch(
+          Seq((ts(0), "click", id.toDouble)).toDF("ts", "event_type", "value"), dir, 0L),
+        dir => spark.read.parquet(dir + "/batch_*").select("sum_value_cents").as[Long]
+          .collect().map(_ / 100).toSet),
+      ("upsertBatch", "v_000000",
+        (id, dir) => Streams.upsertBatch(
+          Seq((id, 1L, "click", ts(0))).toDF("event_id", "user_id", "event_type", "ts"),
+          dir, 0L, Seq("user_id", "event_type"), Seq(desc("ts"))),
+        dir => Streams.readSnapshotVersion(spark, dir).get.select("event_id").as[Long]
+          .collect().toSet))
+    for ((name, partialName, write, committed) <- writers) withClue(s"$name: ") {
+      val dir = java.nio.file.Files.createTempDirectory("graft-partial").toString + "/out"
+      // Fake a crashed write: the batch dir exists with a stray data file
+      // but no commit marker — the replay must delete and rewrite it.
+      val partial = new java.io.File(s"$dir/$partialName")
+      partial.mkdirs()
+      java.nio.file.Files.writeString(partial.toPath.resolve("part-junk.parquet"), "not parquet")
+      write(1L, dir)
+      assert(committed(dir) == Set(1L))
+      assert(new java.io.File(partial, "_GRAFT_COMMITTED").exists())
+      assert(!new java.io.File(partial, "part-junk.parquet").exists())
+      // Second replay with the marker present is now a true no-op.
+      write(9L, dir)
+      assert(committed(dir) == Set(1L))
+    }
   }
 
   test("vacuumUncommitted sweeps only stale marker-less dirs, honors the grace window") {

@@ -81,4 +81,23 @@ class UpsertSinkSpec extends AnyFunSuite {
       assert(snapshotRows(dir) == after)
     } finally Sources.deleteRecursively(new java.io.File(dir))
   }
+
+  test("versions past v_999999 are ordered by id, not by name") {
+    // f"v_$id%06d" widens to seven digits at 1,000,000, and "v_1000000"
+    // sorts before "v_999999" by name.
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-wide").toString
+    def delta(eventId: Long, user: Long, minute: Int) =
+      Seq((eventId, user, "click", java.sql.Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")))
+        .toDF("event_id", "user_id", "event_type", "ts")
+    try {
+      Streams.upsertBatch(delta(1L, 7L, 0), dir, 999999L, keys, order)
+      // Batch 1,000,000 also inserts a key no other batch touches.
+      Streams.upsertBatch(delta(2L, 7L, 1).union(delta(20L, 8L, 1)), dir, 1000000L, keys, order)
+      Streams.upsertBatch(delta(3L, 7L, 2), dir, 1000001L, keys, order)
+      assert(snapshotRows(dir) == Set((7L, "click", 3L), (8L, "click", 20L)))
+      val versions = new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("v_")).map(_.getName)
+      assert(versions.toSeq == Seq("v_1000001"))
+    } finally Sources.deleteRecursively(new java.io.File(dir))
+  }
 }
