@@ -1377,9 +1377,7 @@ object Multimodal {
       }
       None
     } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (sys.env.contains("GRAFT_JPEG_DEBUG")) e.printStackTrace()
-        None
+      case scala.util.control.NonFatal(_) => None
     }
   }
 
