@@ -260,17 +260,11 @@ object Bench {
         k -> (s"worst=${math.round(worst._1 * 1000)}ms best=${math.round(best._1 * 1000)}ms " +
           s"excess=${excessMs}ms gc=${worst._2 - best._2}ms jit=${worst._3 - best._3}ms")
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Verify.jsonString
     def jmap(m: scala.collection.Seq[(String, Any)]): String =
       m.map {
-        case (k, v: String) => s"${jstr(k)}:${jstr(v)}"
-        case (k, v) => s"${jstr(k)}:$v"
+        case (k, v: String) => s"${jsonString(k)}:${jsonString(v)}"
+        case (k, v) => s"${jsonString(k)}:$v"
       }.mkString("{", ",", "}")
     val total = times.values.sum
     // Min-merge this run's numbers into the cross-run record store
@@ -290,7 +284,7 @@ object Bench {
     // the gap between `queries` and `records` only becomes meaningful
     // (and visible) once a quieter pass has run.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(times.toSeq)},"records":${jmap(merged.filter(kv => times.contains(kv._1)))},"spread":${jmap(spread.toSeq)},"spread_cause":${jmap(spreadCause.toSeq)},"reruns":${jmap(reruns.toSeq)},"errors":${jmap(errors.toSeq)},"n_ok":${times.size},"n_err":${errors.size},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(times.toSeq)},"records":${jmap(merged.filter(kv => times.contains(kv._1)))},"spread":${jmap(spread.toSeq)},"spread_cause":${jmap(spreadCause.toSeq)},"reruns":${jmap(reruns.toSeq)},"errors":${jmap(errors.toSeq)},"n_ok":${times.size},"n_err":${errors.size},"sf":${jsonString(sfDir)}}"""
     Files.writeString(Paths.get("BENCH.local.json"), line + "\n")
     // COMMITTED full-fidelity copy: the driver's stdout capture has
     // truncated the ~12 KB per-key line from BOTH ends across rounds
@@ -303,7 +297,7 @@ object Bench {
     if (only.isEmpty && (!since || sinceDegraded))
       Files.writeString(Paths.get("BENCH.full.json"), line + "\n")
     Files.writeString(Paths.get(RecordsPath),
-      s"""{"sf":${jstr(sfDir)},"cpus":${jstr(cpus)},"queries":${jmap(merged)}}\n""")
+      s"""{"sf":${jsonString(sfDir)},"cpus":${jsonString(cpus)},"queries":${jmap(merged)}}\n""")
     // Compact summary (headline totals + the BASELINE.md-comparable
     // subset for the 2× gate): a few hundred bytes of complete JSON,
     // printed BOTH before and after the full line so head-truncating AND
@@ -311,7 +305,7 @@ object Bench {
     val subsetTimes = BaselineSubset.flatMap(k => times.get(k).map(k -> _))
     val subsetTotal = subsetTimes.map(_._2).sum
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(subsetTimes)},"subset_total":$subsetTotal,"n_ok":${times.size},"n_err":${errors.size},"n_rerun":${reruns.size},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(subsetTimes)},"subset_total":$subsetTotal,"n_ok":${times.size},"n_err":${errors.size},"n_rerun":${reruns.size},"sf":${jsonString(sfDir)}}"""
     println(summary)
     println(line)
     println(summary)

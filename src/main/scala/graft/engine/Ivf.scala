@@ -63,11 +63,11 @@ object Ivf {
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     val corpus =
       if (checkpointDir.isDefined) staged.checkpoint() else staged.localCheckpoint()
+    val dim = uniformDim(corpus)
     // Hash-ordered deterministic seed sample.
     var centroids: Array[Array[Double]] = corpus
       .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
       .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    val dim = centroids.headOption.map(_.length).getOrElse(0)
     var it = 0
     while (it < iters) {
       // (r17) Per-iteration update as ONE groupBy(cell) with dim column
@@ -94,6 +94,23 @@ object Ivf {
       it += 1
     }
     centroidFrame(spark, centroids)
+  }
+
+  /** The one vector length of a `v`-carrying corpus (0 when it is
+    * empty), in one aggregate. The column-sum Lloyd update divides
+    * Σ element_at(v, i) by count(1), so a null vector would be counted
+    * in n and shrink its centroid, a longer one would have its tail
+    * ignored and a shorter one would throw from ANSI element_at: a corpus
+    * that is not uniform fails here with a declared error instead.
+    */
+  private[engine] def uniformDim(corpus: DataFrame): Int = {
+    val r = corpus.agg(count(when(col("v").isNull, 1)),
+      min(size(col("v"))), max(size(col("v")))).head()
+    val nulls = r.getLong(0)
+    require(nulls == 0 && (r.isNullAt(1) || r.getInt(1) == r.getInt(2)),
+      s"Lloyd update needs uniform non-null vectors: $nulls null, " +
+        s"length min ${r.get(1)} max ${r.get(2)}")
+    if (r.isNullAt(2)) 0 else r.getInt(2)
   }
 
   private def centroidFrame(spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {

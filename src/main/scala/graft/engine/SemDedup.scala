@@ -117,8 +117,8 @@ object SemDedup {
     // recomputes the same rounded avg independently).
     // An empty corpus has no dimension to average over: its assignment
     // to the (empty) seeds is the empty result.
-    corpus.select(size(col("v"))).head(1).headOption.fold(assignTo(seeds)) { r =>
-      val dim = r.getInt(0)
+    val dim = Ivf.uniformDim(corpus)
+    if (dim == 0) assignTo(seeds) else {
       var cents = seeds
       var it = 0
       while (it < iters) {
@@ -337,6 +337,7 @@ object SemDedup {
     def assignTo(cents: Array[Array[Double]]): DataFrame =
       corpus.withColumn("cell",
         graft.functions.GraftExpressions.nearestCell(col("v"), cents).cast("long"))
+    val dim = Ivf.uniformDim(corpus)
     val seeds: Array[Array[Double]] = corpus.orderBy(col("vec_id")).limit(k)
       .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
     // (r17 second session) Same column-sum Lloyd update as
@@ -344,7 +345,6 @@ object SemDedup {
     // instead of a rows × dim posexplode through two aggregations; the
     // mean is the identical sum/count division, rounded on the same
     // CentroidRound grid that absorbs merge-order float noise.
-    val dim = seeds.headOption.map(_.length).getOrElse(0)
     val sums = (0 until dim).map(i =>
       sum(element_at(col("v"), i + 1)).as(s"__s$i"))
     val updated = assignTo(seeds)

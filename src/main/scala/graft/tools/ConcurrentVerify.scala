@@ -108,7 +108,7 @@ object ConcurrentVerify {
       if (!ok) {
         mismatches += 1
         println(s"""{"client":$i,"key":"$k","rows":[$n0,$n],"hash_graded":$hashGraded,""" +
-          s""""serial_hash":"$h0","client_hash":"$h","err":${if (err == null) "null" else "\"" + err + "\""}}""")
+          s""""serial_hash":"$h0","client_hash":"$h","err":${if (err == null) "null" else graft.Verify.jsonString(err)}}""")
       }
     }
     println(s"""{"concurrent_verify":{"clients":$clients,"n_keys":${keys.size},""" +

@@ -555,8 +555,8 @@ object FuzzGate {
     // oracle_sql.json: the SAME SQL text compare.py will run in DuckDB.
     val sb = new StringBuilder("{\n")
     queries.zipWithIndex.foreach { case ((k, v), i) =>
-      val esc = v.replace("\\", "\\\\").replace("\"", "\\\"")
-      sb.append(s""" "$k": "$esc"""").append(if (i == queries.length - 1) "\n" else ",\n")
+      sb.append(s" ${graft.Verify.jsonString(k)}: ${graft.Verify.jsonString(v)}")
+        .append(if (i == queries.length - 1) "\n" else ",\n")
     }
     sb.append("}\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "oracle_sql.json"), sb.toString)

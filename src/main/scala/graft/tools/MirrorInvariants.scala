@@ -500,7 +500,7 @@ object MirrorInvariants {
     // ---- Closed-form fifth-decade checks for the three keys whose
     // DuckDB oracle exceeds the ~100 GB box at ×970 (r13 verdict item
     // #2: the engine dumps completed there; these replace the OOMing
-    // oracle with exact invariants, the DecadeProbe pattern).
+    // oracle with exact closed-form invariants of the 1x output).
 
     // q_graph_pagerank: the node set is the event-TYPE alphabet (copy-
     // invariant) and every transition count scales uniformly ×N per

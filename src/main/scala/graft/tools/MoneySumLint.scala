@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CaseWhen, Expression, ExprId, If, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, LogicalPlan, Project, Window}
@@ -108,25 +108,35 @@ object MoneySumLint {
   def violations(df: DataFrame): Seq[String] =
     violations(df.queryExecution.optimizedPlan)
 
-  /** Gate-runner face: lints every graded query at the given fixture dir
-    * (plans only — nothing executes), prints one line per dirty key, and
-    * exits non-zero if any violation exists. Wired into the mirror-gate
-    * scripts so a new unhardened money sum fails fast instead of
-    * surfacing as a hash divergence hours into the dump.
+  /** Lints each key's plan at the given fixture dir (plans only —
+    * nothing executes) and prints one line per dirty key. A key whose
+    * plan cannot be built is printed as PLAN-ERROR and counted too: the
+    * lint could not check it, so it must not pass as clean. Returns the
+    * number of dirty or unplannable keys.
+    */
+  def lintKeys(spark: SparkSession, sf: String,
+      keys: Seq[(String, (SparkSession, String) => DataFrame)]): Int =
+    keys.count { case (name, fn) =>
+      try {
+        val v = violations(fn(spark, sf))
+        if (v.nonEmpty) println(s"[money-sum-lint] $name: ${v.mkString("; ")}")
+        v.nonEmpty
+      } catch { case e: Throwable =>
+        println(s"[money-sum-lint] $name PLAN-ERROR ${String.valueOf(e.getMessage).take(80)}")
+        true
+      }
+    }
+
+  /** Gate-runner face: lints every graded query and exits non-zero if
+    * any key is dirty or unplannable. tools/gate.py runs it first, so a
+    * new unhardened money sum fails fast instead of surfacing as a hash
+    * divergence hours into the dump.
     */
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.Sessions.local(8)
-    var dirty = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val v = violations(fn(spark, sf))
-        if (v.nonEmpty) { dirty += 1; println(s"[money-sum-lint] $name: ${v.mkString("; ")}") }
-      } catch { case e: Throwable =>
-        println(s"[money-sum-lint] $name PLAN-ERROR ${e.getMessage.take(80)}")
-      }
-    }
+    val dirty = lintKeys(spark, sf, graft.SparkEntry.queries.toSeq.sortBy(_._1))
     println(s"[money-sum-lint] $dirty dirty keys / ${graft.SparkEntry.queries.size}")
     spark.stop()
     if (dirty > 0) sys.exit(1)

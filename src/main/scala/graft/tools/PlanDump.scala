@@ -37,7 +37,7 @@ object PlanDump {
   def finalPlan(plan: String): String = plan.split("== Initial Plan ==").head
 
   /** Join-strategy histogram of a plan string — the "shape" that must not
-    * flip between scales (ScaleSmoke, BucketedFacts).
+    * flip between scales (ScaleSmoke).
     */
   def planFlags(planIn: String): Map[String, Int] = {
     val plan = finalPlan(planIn)

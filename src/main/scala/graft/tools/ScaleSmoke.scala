@@ -328,7 +328,7 @@ object ScaleSmoke {
   private val stagePeakMem = new java.util.concurrent.atomic.AtomicLong
   @volatile private var listenerOn = false
   @volatile private var scRef: org.apache.spark.SparkContext = _
-  private[tools] def ensureSpillListener(spark: SparkSession): Unit = synchronized {
+  private def ensureSpillListener(spark: SparkSession): Unit = synchronized {
     if (!listenerOn) {
       listenerOn = true
       scRef = spark.sparkContext
@@ -355,12 +355,12 @@ object ScaleSmoke {
         !org.apache.spark.GraftListenerBusAccess.waitUntilEmpty(scRef, 30000L))
       System.err.println("[smoke] WARN listener bus not drained in 30s; " +
         "spill/peak attribution may be off")
-  private[tools] def spillSnapshot(): (Long, Long) = {
+  private def spillSnapshot(): (Long, Long) = {
     drain()
     (memSpill.get, diskSpill.get)
   }
-  private[tools] def resetPeak(): Unit = { drain(); stagePeakMem.set(0) }
-  private[tools] def peakSnapshot(): Long = { drain(); stagePeakMem.get }
+  private def resetPeak(): Unit = { drain(); stagePeakMem.set(0) }
+  private def peakSnapshot(): Long = { drain(); stagePeakMem.get }
 
   def runKey(spark: SparkSession, name: String, dir: String): (Double, Long, Map[String, Int]) = {
     def run(): (Double, Long, Map[String, Int]) = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tools.MoneySumLint
 
@@ -74,6 +75,18 @@ class MoneySumLintSpec extends AnyFunSuite {
       if (v.nonEmpty) Some(s"$name: ${v.mkString("; ")}") else None
     }
     assert(dirty.isEmpty, dirty.mkString("\n"))
+  }
+
+  test("a key whose plan throws counts as a failure, null message included") {
+    // The gate must not pass a key the lint could not check, and a
+    // message-less exception must not crash the whole lint.
+    val keys = Seq[(String, (SparkSession, String) => DataFrame)](
+      "clean" -> ((s, d) => graft.engine.Tables.lineitem(s, d).select(col("l_quantity"))),
+      "broken" -> ((_, _) => throw new RuntimeException(null: String)))
+    val out = new java.io.ByteArrayOutputStream
+    val failed = Console.withOut(out)(MoneySumLint.lintKeys(spark, TestSpark.sfDir, keys))
+    assert(failed == 1, out.toString)
+    assert(out.toString.contains("broken PLAN-ERROR null"), out.toString)
   }
 
   test("no raw round(sum(value)) constructions anywhere in engine sources") {

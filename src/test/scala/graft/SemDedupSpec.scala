@@ -1,8 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.SemDedup
+import graft.engine.{Ivf, SemDedup}
 
 /** SemDeDup semantics the mirrored oracle cannot independently witness
   * (both engines replicate the same pipeline, so a shared semantic slip
@@ -130,6 +131,27 @@ class SemDedupSpec extends AnyFunSuite {
     val cells = SemDedup.deterministicCells(empty, SemDedup.K, 1)
     assert(cells.columns.toSeq.take(2) == Seq("vec_id", "cell"))
     assert(cells.collect().isEmpty)
+  }
+
+  test("Lloyd updates reject a null or short vector with a declared error") {
+    // The column-sum mean divides Σ element_at(v, i) by count(1): a null
+    // vector would shrink its centroid and a short one would throw from
+    // ANSI element_at. All three update sites refuse both up front.
+    val corpus = SemDedup.plantedCorpus(spark, TestSpark.sfDir)
+    val last = col("vec_id") === corpus.agg(max(col("vec_id"))).head().get(0)
+    val bad = Seq(
+      "null" -> corpus.withColumn("v",
+        when(last, lit(null).cast("array<double>")).otherwise(col("v"))),
+      "short" -> corpus.withColumn("v",
+        when(last, slice(col("v"), 1, 3)).otherwise(col("v"))))
+    val sites = Seq[(String, DataFrame => Unit)](
+      "deterministicCells" -> (c => SemDedup.deterministicCells(c, SemDedup.K, 1).collect()),
+      "deterministicScaledCells" -> (c => SemDedup.deterministicScaledCells(c, SemDedup.K).collect()),
+      "Ivf.train" -> (c => Ivf.train(c.withColumnRenamed("v", "embedding"), SemDedup.K).collect()))
+    for ((what, c) <- bad; (site, run) <- sites) {
+      val e = intercept[IllegalArgumentException](run(c))
+      assert(e.getMessage.contains("uniform non-null vectors"), s"$site on a $what vector")
+    }
   }
 
   test("all eight id-order seed cells are non-empty after one update") {
