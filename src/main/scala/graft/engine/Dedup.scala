@@ -521,8 +521,9 @@ object Dedup {
   /** Size-dispatched: Broadcast while the signature corpus is small
     * enough to broadcast safely, Salted beyond. The decisive broadcast is
     * the per-doc SET dictionary (~KB/doc for token arrays), so the
-    * default caps well under executor broadcast limits; the count is free
-    * because the signatures are localCheckpointed before dispatch.
+    * default caps well under executor broadcast limits. The dispatch
+    * count is one Spark job over the checkpointed signatures; it stays
+    * because the shape must be fixed before the candidate join is planned.
     */
   final case class Auto(maxBroadcastDocs: Long = 500000L) extends LshShape
 
@@ -645,6 +646,8 @@ object Dedup {
     // bogus pair (and all-empty docs share the degenerate all-MaxValue
     // signature, so they WOULD collide). CosineLsh.nearDup's counterpart
     // is its zero/NaN/Inf norm guard.
+    // One job; it stays because the dispatch count, the candidate join
+    // and the confirm dictionary all read the signatures.
     val sigs = sigsIn.where(size(col(setCol)) > 0).localCheckpoint()
     val shape = resolveShape(shapeIn, sigs)
     val pairs = bandedCandidates(sigs, "doc_id", "bands", shape, blockCols,
@@ -763,7 +766,8 @@ object Dedup {
   }
 
   /** Auto → Broadcast or Salted by counting the (already materialized)
-    * checkpointed corpus; concrete shapes pass through.
+    * checkpointed corpus — one Spark job, see [[Auto]]; concrete shapes
+    * pass through.
     */
   private[graft] def resolveShape(shape: LshShape, checkpointedSigs: DataFrame): LshShape =
     shape match {
@@ -778,12 +782,14 @@ object Dedup {
     * LARGER side, not just the corpus: a huge delta probed against a
     * small corpus would otherwise pick Broadcast and ship the unbounded
     * delta dictionary to every executor (r5 advice). Both frames must be
-    * checkpointed (counts are then metadata-cheap).
+    * checkpointed. Each count is one Spark job; they stay because the
+    * shape must be fixed before the candidate join is planned, and the
+    * second is skipped once the first exceeds the cap.
     */
   private[graft] def resolveShapeBoth(shape: LshShape, a: DataFrame, b: DataFrame): LshShape =
     shape match {
       case Auto(maxDocs) =>
-        if (math.max(a.count(), b.count()) <= maxDocs) Broadcast else Salted()
+        if (a.count() <= maxDocs && b.count() <= maxDocs) Broadcast else Salted()
       case s => s
     }
 
@@ -1115,32 +1121,40 @@ object Dedup {
     containmentPairs(base.unionByName(planted), "toks", 9, 10)
   }
 
-  /** Near-dup CLUSTERS from a pair list: connected components by
-    * iterative min-label propagation + pointer jumping, entirely in
-    * DataFrame ops. Per-pair `doc_b`-dropping leaves MULTIPLE
+  /** Near-dup CLUSTERS from a pair list: connected components labeled by
+    * their min doc id. Per-pair `doc_b`-dropping leaves MULTIPLE
     * representatives per transitive cluster — every doc that is a local
     * minimum among its direct neighbors survives (pairs (5,10), (1,10):
     * both 1 and 5 survive though they share cluster {1,5,10}); component
     * clustering keeps exactly ONE canonical doc (the component min) per
-    * cluster, the standard corpus-dedup policy.
+    * cluster, the standard corpus-dedup policy. Returns (doc_id,
+    * component) for every doc in `pairs`; docs in no pair are their own
+    * component by definition.
     *
-    * Each round: every doc adopts min(own, neighbors') label, then jumps
-    * to its label's label — so labels converge in O(log diameter) rounds
-    * (maxIter 30 covers diameter ~2³⁰) and the loop exits as soon as the
-    * propagation step moves nothing (a propagate-fixed-point means labels
-    * are constant per component, making the jump an identity). A
-    * non-converged exit THROWS rather than silently returning split
-    * components. Returns (doc_id, component) for every doc in `pairs`;
-    * docs in no pair are their own component by definition.
+    * Two finishes, one result (min-label components are unique, so the
+    * rows are identical; ComponentsSpec pins it, schema included):
+    *   - the undirected edge list is persisted, then collected with one
+    *     bounded collect ([[Graph.collectLongPairs]]). At or under
+    *     [[Graph.DriverFinishRows]] pairs of LongType ids it is finished
+    *     on the driver by union-find over primitive arrays
+    *     ([[componentsOnDriver]]);
+    *   - past the budget (or for other id types, or null ids)
+    *     [[componentsDistributed]] runs min-label propagation + pointer
+    *     jumping in DataFrame ops over the persisted edges: labels
+    *     converge in O(log diameter) rounds, and a non-converged exit
+    *     after `maxIter` rounds THROWS rather than silently returning
+    *     split components. `maxIter` and that throw apply to this loop
+    *     only; the driver finish has no rounds.
     *
-    * 100 TB shape: state per round is one (doc_id, label) frame
-    * partitioned by doc_id, never driver-side; movement detection is a
-    * flag computed inside the propagate projection, not an extra join.
+    * 100 TB shape: the distributed state per round is one (doc_id,
+    * label) frame partitioned by doc_id, never driver-side; movement
+    * detection is a flag computed inside the propagate projection, not
+    * an extra join.
     *
-    * `checkpointDir`: by default each round truncates lineage with
-    * `localCheckpoint` (executor-local blocks — fast, but lost if an
+    * `checkpointDir`: by default the edges and each round are persisted
+    * with `localCheckpoint` (executor-local blocks — fast, but lost if an
     * executor dies, which on a cluster forces a job restart). Passing a
-    * reliable directory (HDFS/object store) switches every round to
+    * reliable directory (HDFS/object store) switches them to
     * `df.checkpoint()` there, so a lost executor recovers from the last
     * round's files instead — the fault-tolerance contract a multi-hour
     * 100 TB clustering run needs. Same results either way (spec'd).
@@ -1153,23 +1167,75 @@ object Dedup {
     * execution detail).
     */
   def nearDupComponents(pairs: DataFrame, maxIter: Int = 30,
-      checkpointDir: Option[String] = None, merge: Boolean = false): DataFrame = {
+      checkpointDir: Option[String] = None, merge: Boolean = false): DataFrame =
+    componentsWithin(pairs, maxIter, checkpointDir, merge, Graph.DriverFinishRows)
+
+  /** [[nearDupComponents]] with the driver budget as a parameter — the
+    * seam ComponentsSpec uses to force the distributed path.
+    */
+  private[graft] def componentsWithin(pairs: DataFrame, maxIter: Int,
+      checkpointDir: Option[String], merge: Boolean, budget: Int): DataFrame = {
     // Session-global mutation ONCE, before the loop — per-round re-sets
     // would race with a concurrent caller using a different directory.
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     def persistRound(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     // Undirected edge list, both directions — so every doc appears as
-    // `src`, which is what lets the joins below be inner joins. (r17)
+    // `src`, which is what lets the loop's joins be inner joins. (r17)
     // Emitted via ONE explode rather than a two-branch union: the union
     // form evaluated the whole upstream pair pipeline (candidate join +
     // confirm kernel) TWICE inside the materialization job — measured
-    // 3.5 s vs 1.9 s for a single pass at sf0.1.
+    // 3.5 s vs 1.9 s for a single pass at sf0.1. Persisted (one job):
+    // the bounded collect and the distributed loop both read it.
     val edges = persistRound(
       pairs.select(explode(array(
           struct(col("doc_a").as("src"), col("doc_b").as("dst")),
           struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    // Each pair once (both directions carry the same union); a pair with
+    // a null id keeps both rows, so the null check below sees it.
+    val oneWay = edges.where(coalesce(col("src") <= col("dst"), lit(true)))
+    Graph.collectLongPairs(oneWay, budget)
+      .map { case (a, b) => componentsOnDriver(edges, a, b) }
+      .getOrElse(componentsDistributed(edges, maxIter, persistRound, merge))
+  }
+
+  /** The driver finish of [[nearDupComponents]]: union-find over the
+    * collected pairs (a(i), b(i)) on dense indices in id order, always
+    * linking the larger root under the smaller — so every root is its
+    * component's min id, the distributed form's label. Emits one row per
+    * id, with the distributed form's schema.
+    */
+  private def componentsOnDriver(edges: DataFrame, a: Array[Long], b: Array[Long]): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val (ids, ia, ib) = Graph.denseIds(a, b)
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var i = 0
+    while (i < ia.length) {
+      val (ra, rb) = (find(ia(i)), find(ib(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    val src = edges.schema("src")
+    val schema = StructType(Seq(src.copy(name = "doc_id"),
+      StructField("component", src.dataType, nullable = true)))
+    Graph.longFrame(edges.sparkSession, schema, ids,
+      Array.tabulate(ids.length)(i => ids(find(i))))
+  }
+
+  /** The distributed finish of [[nearDupComponents]] over the persisted
+    * undirected `edges` (src, dst): a fused min-label round 0, then
+    * frontier-filtered [[componentsRound]]s until nothing moves, each
+    * round persisted by `persistRound`. Throws if `maxIter` rounds do not
+    * converge.
+    */
+  private[graft] def componentsDistributed(edges: DataFrame, maxIter: Int,
+      persistRound: DataFrame => DataFrame, merge: Boolean): DataFrame = {
     // Fused round 0: against identity labels the first propagation is just
     // min(self, direct neighbors) — one aggregation over edges instead of
     // a full join round (labels stay ids of member docs: every neighbor
@@ -1190,6 +1256,8 @@ object Dedup {
     var converged = false
     while (it < maxIter && !converged) {
       val next = persistRound(componentsRound(edges, labels, merge, frontier))
+      // One job per round; it stays because the loop cannot plan the
+      // next round (or stop) until it knows whether a label moved.
       converged = next.where(col("__moved")).limit(1).count() == 0
       frontier = next.where(col("__changed")).select(col("doc_id"), col("component"))
       labels = next.drop("__moved", "__changed")
@@ -1201,7 +1269,7 @@ object Dedup {
   }
 
   /** One min-label-propagation + pointer-jump round (the loop body of
-    * [[nearDupComponents]], extracted so PlanSpec can pin the
+    * [[componentsDistributed]], extracted so PlanSpec can pin the
     * `merge = true` round plan broadcast-free): every doc adopts
     * min(own, neighbors') label, then jumps to its label's label.
     * Labels are always member doc ids, so the pointer-jump lookup join
@@ -1259,13 +1327,14 @@ object Dedup {
   /** Graded surface for nearDupComponents: components of the ≥0.9-Jaccard
     * near-dup graph. Oracle: DuckDB recursive CTE computing the transitive
     * closure's per-doc min label over the exact all-pairs edge list — so
-    * the iterative DataFrame loop is checked against an independent
-    * fixpoint formulation. The pair stage runs `Auto` shape dispatch
-    * (r4 verdict: the fixed-`Broadcast` twin here was the one graded
-    * composition that would broadcast per-doc set dictionaries at 100×
-    * scale) — Broadcast under the doc cap, the no-broadcast Salted form
-    * past it; the clustering rounds are shape-agnostic and get the
-    * `merge` no-broadcast twin via [[nearDupComponents]]'s flag.
+    * the components finish (the driver union-find at fixture scale) is
+    * checked against an independent fixpoint formulation. The pair stage
+    * runs `Auto` shape dispatch (r4 verdict: the fixed-`Broadcast` twin
+    * here was the one graded composition that would broadcast per-doc
+    * set dictionaries at 100× scale) — Broadcast under the doc cap, the
+    * no-broadcast Salted form past it; the clustering rounds are
+    * shape-agnostic and get the `merge` no-broadcast twin via
+    * [[nearDupComponents]]'s flag.
     */
   val qNeardupComponents: Q = (s, d) =>
     nearDupComponents(

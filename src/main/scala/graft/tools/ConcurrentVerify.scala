@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Concurrent-CORRECTNESS probe (round-12 verdict item #8): the FAIR-pool
-  * interference of N simultaneous clients is measured (ConcurrentBench);
-  * this tool pins that their ANSWERS are stable — every key, evaluated by
+  * interference of N simultaneous clients was measured once (committed as
+  * BENCH.concurrent.json); this tool pins that their ANSWERS are stable — every key, evaluated by
   * N concurrent clients sharing one session, must hash-match the serial
   * run.
   *
@@ -115,7 +115,7 @@ object ConcurrentVerify {
       s""""excluded":${if (Excluded.isEmpty) "[]" else Excluded.toSeq.sorted.mkString("[\"", "\",\"", "\"]")},""" +
       s""""checks":${keys.size * clients},"hash_graded_checks":${keys.size * clients - rowsOnlyChecks},""" +
       s""""rows_only_checks":$rowsOnlyChecks,"session_per_client":true,"mismatches":$mismatches,""" +
-      s""""wall_concurrent_sec":${f"$wall%.1f"},"sf":"$sfDir","pass":${mismatches == 0}}}""")
+      s""""wall_concurrent_sec":${f"$wall%.1f"},"sf":${graft.Verify.jsonString(sfDir)},"pass":${mismatches == 0}}}""")
     spark.stop()
     if (mismatches > 0) sys.exit(1)
   }

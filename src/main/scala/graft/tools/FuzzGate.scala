@@ -562,7 +562,7 @@ object FuzzGate {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "oracle_sql.json"), sb.toString)
 
     errors.foreach { case (k, e) => System.err.println(s"[fuzz] $k FAILED on Spark: $e") }
-    println(s"""{"fuzz":{"n":$n,"seed":$seed,"src":"$src","spark_errors":${errors.length}}}""")
+    println(s"""{"fuzz":{"n":$n,"seed":$seed,"src":${graft.Verify.jsonString(src)},"spark_errors":${errors.length}}}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

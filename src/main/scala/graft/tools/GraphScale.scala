@@ -27,8 +27,8 @@ import graft.engine.Graph
   *    lineage re-reads an earlier iteration — each breaks single-value
   *    equality, so the gate is sensitive to the failure modes of the
   *    loop, not just its arithmetic.
-  *  - `triangles_star`: [[Graph.triangleCountsDegreeOriented]] — the
-  *    graded skew-proof kernel — over the hub+chain frame at N ids: a
+  *  - `triangles_star`: [[Graph.triangleCountsDistributed]] — the
+  *    graded key's skew-proof kernel past its driver budget — over the hub+chain frame at N ids: a
   *    hub vertex adjacent to ALL N ids plus the consecutive-id chain,
   *    2N−1 edges with deg(hub) = N (the adversarial skew the
   *    Schank–Wagner orientation exists to kill; id-orientation would
@@ -87,7 +87,8 @@ object GraphScale {
       val star = ids.select(lit(-1L).as("a"), col("id").as("b"))
       val chain = ids.where(col("id") < n - 1)
         .select(col("id").as("a"), (col("id") + 1).as("b"))
-      val tri = Graph.triangleCountsDegreeOriented(star.union(chain)).localCheckpoint()
+      val tri = Graph.triangleCountsDistributed(star.union(chain).localCheckpoint())
+        .localCheckpoint()
       // Histogram of per-node triangle counts — closed form.
       val hist = tri.groupBy(col("n_triangles")).agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

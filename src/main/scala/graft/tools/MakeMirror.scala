@@ -38,7 +38,7 @@ object MakeMirror {
       .getOrElse(ScaleSmoke.keyCols.keys.toSet)
     val spark = graft.Sessions.local(32)
     ScaleSmoke.synthesize(spark, src, out, factor, tables, singleDims, vectorMode)
-    println(s"""{"mirror":"$out","src":"$src","factor":$factor,""" +
+    println(s"""{"mirror":${graft.Verify.jsonString(out)},"src":${graft.Verify.jsonString(src)},"factor":$factor,""" +
       s""""singleDims":$singleDims,"vectorMode":"$vectorMode"}""")
     spark.stop()
   }

@@ -621,7 +621,7 @@ object MirrorInvariants {
       .foreach { case (k, why) =>
         println(s"""{"key":"$k","excluded":"$why"}""")
       }
-    println(s"""{"mirror_invariants":{"src":"$src","dir":"$dir","factor":$factor,"pass":${!fail}}}""")
+    println(s"""{"mirror_invariants":{"src":${graft.Verify.jsonString(src)},"dir":${graft.Verify.jsonString(dir)},"factor":$factor,"pass":${!fail}}}""")
     spark.stop()
     if (fail) System.exit(1)
   }

@@ -69,7 +69,7 @@ object ReplayScale {
     // break via crash_missed.
     val crashMissed = crashFrac > 0 && !st.crashed
     val pass = d.equal && st.droppedByWatermark == 0 && !crashMissed
-    println(s"""{"replay_scale":{"src":"$src","segments":$segments,"rows":$total,""" +
+    println(s"""{"replay_scale":{"src":${graft.Verify.jsonString(src)},"segments":$segments,"rows":$total,""" +
       s""""crash_injected":${st.crashed},"crash_missed":$crashMissed,"rows_before_kill":${st.rowsBeforeKill},""" +
       s""""survivors_stream":${d.nA},"survivors_batch":${d.nB},"only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
       s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +

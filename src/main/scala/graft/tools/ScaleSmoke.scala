@@ -269,7 +269,7 @@ object ScaleSmoke {
     // truncated — is never silently reused as a valid mirror.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outDir, "_GRAFT_MIRROR.json"),
-      s"""{"src":"$srcDir","factor":$factor,"singleDims":$singleDims,""" +
+      s"""{"src":${graft.Verify.jsonString(srcDir)},"factor":$factor,"singleDims":$singleDims,""" +
         s""""vectorMode":"$vectorMode",""" +
         s""""tables":[${tables.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]}""")
   }
@@ -501,7 +501,7 @@ object ScaleSmoke {
       (k, t1, tN, ratio, flip, over, memOver)
     }
     val maxR = results.map(_._4).max
-    println(s"""{"scale_smoke":{"src":"$src","factor":$factor,"slack":$slack,""" +
+    println(s"""{"scale_smoke":{"src":${graft.Verify.jsonString(src)},"factor":$factor,"slack":$slack,""" +
       s""""n_keys":${results.size},"n_flips":${results.count(_._5)},""" +
       s""""n_over":${results.count(_._6)},"n_mem_over":${results.count(_._7)},""" +
       s""""max_ratio":${f"$maxR%.2f"},"pass":${!fail}}}""")

@@ -198,7 +198,7 @@ object StreamJoinScale {
     val pass = faces.forall(f => f.diff.equal && f.stateBounded && f.run.droppedByWatermark == 0) &&
       crossOk && !crashMissed
     val crossJson = crossChecks.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    println(s"""{"stream_join":{"src":"$src","rows":$evCount,"slices":$slices,""" +
+    println(s"""{"stream_join":{"src":${graft.Verify.jsonString(src)},"rows":$evCount,"slices":$slices,""" +
       s""""crash_frac":$crashFrac,"crash_missed":$crashMissed,""" +
       s"""$crossJson${if (crossJson.nonEmpty) "," else ""}"pass":$pass}}""")
     spark.stop()

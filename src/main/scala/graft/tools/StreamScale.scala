@@ -448,7 +448,7 @@ object StreamScale {
         s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},"wall_sec":${f"$wallSec%.1f"}}""")
     }
     val pass = results.forall(r => r.diff.equal && r.run.droppedByWatermark == 0) && !evictFail
-    println(s"""{"stream_scale":{"src":"$src","slices":$slices,"pass":$pass}}""")
+    println(s"""{"stream_scale":{"src":${graft.Verify.jsonString(src)},"slices":$slices,"pass":$pass}}""")
     spark.stop()
     if (!pass) System.exit(1)
   }

@@ -21,10 +21,61 @@ class ComponentsSpec extends AnyFunSuite {
     rows.toMap
   }
 
+  /** The driver finish (budget default) against the distributed loop
+    * (budget 0 forces it): same rows, same schema. maxIter binds only the
+    * distributed loop, which throws before its first round at maxIter 0
+    * — so a result from `maxIter = 0` proves the driver finish ran.
+    */
+  private def assertFinishesAgree(pairs: org.apache.spark.sql.DataFrame,
+      merge: Boolean = false): Unit = {
+    val driver = Dedup.nearDupComponents(pairs, maxIter = 0, merge = merge)
+    val distributed = Dedup.componentsWithin(pairs, 30, None, merge, budget = 0)
+    assert(driver.schema == distributed.schema,
+      s"${driver.schema.treeString} vs ${distributed.schema.treeString}")
+    val (d, s) = (driver.as[(Long, Long)].collect().sorted.toSeq,
+      distributed.as[(Long, Long)].collect().sorted.toSeq)
+    assert(d == s, s"driver=$d distributed=$s")
+  }
+
+  private val soup = (1 to 80).map { i =>
+    val h = i * 2654435761L
+    val a = math.floorMod(h, 60L); val b = math.floorMod(h >> 7, 60L)
+    (math.min(a, b), math.max(a, b) + 1) // +1 avoids self-loops
+  }.distinct
+
+  test("driver finish equals the distributed loop: chain, clique + cross-link, soup, merge") {
+    assertFinishesAgree(Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b"))
+    assertFinishesAgree((
+      (1L to 9L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (20L, 22L), (21L, 22L)) ++
+      Seq((10L, 20L))).toDF("doc_a", "doc_b"))
+    assertFinishesAgree(soup.toDF("doc_a", "doc_b"))
+    assertFinishesAgree(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L),
+      (21L, 22L)).toDF("doc_a", "doc_b"), merge = true)
+  }
+
+  test("driver finish equals the distributed loop on nullable fixture pairs") {
+    // LSH pairs carry nullable id columns, unlike the toDF shapes above.
+    assertFinishesAgree(Dedup.qNeardupLsh(spark, TestSpark.sfDir)
+      .select("doc_a", "doc_b").localCheckpoint())
+  }
+
+  test("an input over the driver budget takes the distributed loop") {
+    // maxIter binds the distributed loop only: one round cannot settle a
+    // 40-node chain, so the over-budget run throws while the driver
+    // finish (no rounds) returns the single component.
+    val chain = (1L to 39L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException](
+      Dedup.componentsWithin(chain, 1, None, merge = false, budget = 38))
+    assert(e.getMessage.contains("did not converge"))
+    val atBudget = Dedup.componentsWithin(chain, 1, None, merge = false, budget = 39)
+    assert(atBudget.as[(Long, Long)].collect().toMap == (1L to 40L).map(_ -> 1L).toMap)
+  }
+
   test("frontier-filtered rounds are bit-equal to full-frontier rounds") {
     // The r17 frontier optimization's equivalence pin: run the loop once
-    // with the production frontier (changed labels only) via
-    // nearDupComponents, and once passing the FULL label set as the
+    // with the production frontier (changed labels only) via the
+    // distributed finish (budget 0), and once passing the FULL label set as the
     // frontier every round — per-round results and the fixpoint must
     // coincide (the scaladoc's monotonicity proof, checked on a shape
     // with a long chain, a clique, and a cross-link so late rounds have
@@ -34,7 +85,8 @@ class ComponentsSpec extends AnyFunSuite {
       Seq((20L, 21L), (20L, 22L), (21L, 22L)) ++    // clique
       Seq((10L, 20L))                               // cross-link
     ).toDF("doc_a", "doc_b")
-    val prod = Dedup.nearDupComponents(pairs).as[(Long, Long)].collect().toMap
+    val prod = Dedup.componentsWithin(pairs, 30, None, merge = false, budget = 0)
+      .as[(Long, Long)].collect().toMap
     // Full-frontier replay of the same loop.
     val edges = pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
@@ -70,11 +122,7 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("matches a reference union-find on a generated pair soup") {
     // Deterministic pseudo-random edges over 60 nodes.
-    val pairs = (1 to 80).map { i =>
-      val h = i * 2654435761L
-      val a = math.floorMod(h, 60L); val b = math.floorMod(h >> 7, 60L)
-      (math.min(a, b), math.max(a, b) + 1) // +1 avoids self-loops
-    }.distinct
+    val pairs = soup
     // Reference: tiny union-find.
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
@@ -93,6 +141,9 @@ class ComponentsSpec extends AnyFunSuite {
         checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // budget 0: the rounds of the distributed loop checkpoint there too.
+    assert(Dedup.componentsWithin(pairs.toDF("doc_a", "doc_b"), 30, Some(dir),
+      merge = false, budget = 0).as[(Long, Long)].collect().toMap == got)
     val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(written > 0, s"no checkpoint files under $dir")
@@ -102,7 +153,9 @@ class ComponentsSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L))
     val plain = Dedup.nearDupComponents(pairs.toDF("doc_a", "doc_b"))
       .as[(Long, Long)].collect().toMap
-    val merged = Dedup.nearDupComponents(pairs.toDF("doc_a", "doc_b"), merge = true)
+    // budget 0: the merge hint only shapes the distributed rounds.
+    val merged = Dedup.componentsWithin(pairs.toDF("doc_a", "doc_b"), 30, None,
+        merge = true, budget = 0)
       .as[(Long, Long)].collect().toMap
     assert(merged == plain)
     assert(plain == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,

@@ -68,13 +68,12 @@ class MoneySumLintSpec extends AnyFunSuite {
     // MoneySumLint: a localCheckpoint() inside a query severs lineage,
     // so checkpoint-built keys (source round-trips, AQE-scoped bodies)
     // are guarded by grepping their construction sites instead — the
-    // companion test below.
-    val dirty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val v = try MoneySumLint.violations(fn(spark, TestSpark.sfDir))
-        catch { case _: Throwable => Nil } // plan-time env failures grade elsewhere
-      if (v.nonEmpty) Some(s"$name: ${v.mkString("; ")}") else None
-    }
-    assert(dirty.isEmpty, dirty.mkString("\n"))
+    // companion test below. A key whose plan throws counts as dirty: the
+    // lint could not check it.
+    val out = new java.io.ByteArrayOutputStream
+    val dirty = Console.withOut(out)(MoneySumLint.lintKeys(spark, TestSpark.sfDir,
+      SparkEntry.queries.toSeq.sortBy(_._1)))
+    assert(dirty == 0, out.toString)
   }
 
   test("a key whose plan throws counts as a failure, null message included") {
