@@ -204,12 +204,13 @@ object CosineLsh {
 
   /** Embedding-cluster RESOLUTION — the vector twin of the text-side
     * detect → cluster → resolve chain (`q_neardup_resolve`): hyperplane-
-    * LSH cosine pairs → connected components (min-label + pointer
-    * jumping, the shared `Dedup.nearDupComponents` loop) → one canonical
+    * LSH cosine pairs → connected components (the shared
+    * `Dedup.nearDupComponents`) → one canonical
     * vec per cluster with its group size. This is the frame a semantic-
     * dedup job joins back to the corpus to keep one representative per
     * embedding cluster. Identical physical story to the text chain:
-    * banded candidates, broadcast-free iterative rounds.
+    * banded candidates, then the components finish the pair list's size
+    * picks.
     */
   val qCosineResolve: Q = (s, d) => {
     val corpus = plantedNearDupCorpus(s, d)

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *     transition graph is bounded by |event types|² (model-state sized,
   *     like Stats' ≤25-nation frame), while the triangle join shuffles on
   *     vertex keys with per-task fan-out bounded by the max clique size.
-  *   [[pagerank]] itself is a plain DataFrame loop — on an UNBOUNDED node
-  *   set (user-level graphs) the identical loop runs fully distributed;
-  *   checkpoint cadence would then follow Dedup.nearDupComponents.
+  *   The derived graph's size picks each finish: [[pagerank]] and the
+  *   triangle census collect a graph that fits [[DriverFinishRows]] and
+  *   finish on the driver, and run their distributed forms past it.
   */
 object Graph {
   import Tables.events
@@ -49,6 +49,7 @@ object Graph {
     * where P rows sum to 1 — dangling nodes (no outgoing edges) get
     * explicit uniform edges to every node, so total rank mass is
     * conserved exactly (spec-asserted) instead of leaking per iteration.
+    * d = [[Damping]], [[PrIters]] iterations.
     *
     * Determinism contract: each iteration's rank is rounded to 12
     * decimals IN BOTH ENGINES (the oracle unrolls the same iterations),
@@ -57,29 +58,52 @@ object Graph {
     * discipline as the cosine keys' round-then-compare, applied per
     * iteration because the computation is iterative.
     *
-    * `nodesIn` must carry a `node` column; N = |distinct nodes| is
-    * counted on the driver — bounded model state by contract here
-    * (event-type cardinality), NOT corpus-sized.
+    * `edgesIn` carries (src, dst, n), `nodesIn` a `node` column. Two
+    * finishes, one result (GraphSpec pins rows and schema): when the
+    * edges and the distinct nodes each fit [[DriverFinishRows]] they are
+    * collected (one bounded collect each) and iterated on the driver
+    * ([[pagerankOnDriver]]); otherwise [[pagerankDistributed]] runs the
+    * same iterations as DataFrame ops.
     */
-  def pagerank(edgesIn: DataFrame, nodesIn: DataFrame,
-      damping: Double = Damping, iters: Int = PrIters,
-      bounded: Boolean = true): DataFrame = {
-    // Materialize the |nodes|²-bounded edge list ONCE — it feeds three
-    // plan branches (outflow totals, normalized edges, dangling
-    // detection); unpinned, the corpus-scale window behind it would run
-    // three times.
-    // With `bounded = true` (the graded transition-graph key) the
-    // |nodes|²-bounded frames ride ONE partition through the iteration
-    // loop: at 32 shuffle partitions every tiny stage would otherwise
-    // pay 32 task launches × iterations — pure overhead for ≤|types|²
-    // rows. `bounded = false` is the UNBOUNDED-node-set mode (user- or
-    // document-level graphs): natural partitioning, the same loop body,
-    // every per-iteration materialization distributed — proven at 97M
-    // nodes by tools/GraphScale's closed-form cycle probe.
-    if (bounded) return pagerankBounded(edgesIn, nodesIn, damping, iters)
-    def shape(df: DataFrame): DataFrame = df
-    val edges = shape(edgesIn).localCheckpoint()
-    val nodes = shape(nodesIn.select(col("node")).distinct()).localCheckpoint()
+  def pagerank(edgesIn: DataFrame, nodesIn: DataFrame): DataFrame =
+    pagerankWithin(edgesIn, nodesIn, DriverFinishRows)
+
+  /** [[pagerank]] with the driver budget as a parameter — the seam
+    * GraphSpec uses to force the distributed loop.
+    */
+  private[graft] def pagerankWithin(edgesIn: DataFrame, nodesIn: DataFrame,
+      budget: Int): DataFrame = {
+    val nodes = nodesIn.select(col("node")).distinct().limit(budget + 1).collect().map(_.get(0))
+    val edges = if (nodes.length > budget) None else indexedEdges(edgesIn, nodes, budget)
+    edges.map(pagerankOnDriver(nodesIn, nodes, _)).getOrElse(pagerankDistributed(edgesIn, nodesIn))
+  }
+
+  /** `edgesIn`'s (src, dst, n) rows as src and dst indices into `nodes`
+    * (−1 off the node set) and weights, if there are at most `budget` —
+    * so the collected Rows are garbage before the driver loop runs.
+    */
+  private def indexedEdges(edgesIn: DataFrame, nodes: Array[Any],
+      budget: Int): Option[(Array[Int], Array[Int], Array[Double])] = {
+    val rows = edgesIn.select(col("src"), col("dst"), col("n").cast("double"))
+      .limit(budget + 1).collect()
+    if (rows.length > budget) return None
+    val index = new java.util.HashMap[Any, Int](2 * nodes.length)
+    nodes.indices.foreach(i => index.put(nodes(i), i))
+    def at(v: Any): Int = if (index.containsKey(v)) index.get(v) else -1
+    Some((rows.map(r => at(r.get(0))), rows.map(r => at(r.get(1))), rows.map(_.getDouble(2))))
+  }
+
+  /** The distributed form of [[pagerank]] for node sets past the driver
+    * budget (user- or document-level graphs): every per-iteration
+    * materialization runs distributed — proven at 97M nodes by
+    * tools/GraphScale's closed-form cycle probe.
+    */
+  private[graft] def pagerankDistributed(edgesIn: DataFrame, nodesIn: DataFrame): DataFrame = {
+    // Materialize the edge list ONCE — it feeds three plan branches
+    // (outflow totals, normalized edges, dangling detection); unpinned,
+    // the corpus-scale window behind it would run three times.
+    val edges = edgesIn.localCheckpoint()
+    val nodes = nodesIn.select(col("node")).distinct().localCheckpoint()
     val n = nodes.count().toDouble
     val outw = edges.groupBy(col("src")).agg(sum(col("n")).as("w"))
     val real = edges.join(outw, "src")
@@ -92,7 +116,7 @@ object Graph {
     val p = real.unionByName(dangling).localCheckpoint()
     var ranks = nodes.select(col("node"), round(lit(1.0 / n), 12).as("r"))
     var i = 0
-    while (i < iters) {
+    while (i < PrIters) {
       val contrib = ranks.join(p, col("node") === col("src"))
         .groupBy(col("dst")).agg(sum(col("r") * col("p")).as("m"))
         .select(col("dst").as("cnode"), col("m"))
@@ -102,69 +126,59 @@ object Graph {
       // reason Dedup.nearDupComponents checkpoints every round.
       ranks = nodes.join(contrib, col("node") === col("cnode"), "left")
         .select(col("node"),
-          round(lit((1 - damping) / n) +
-            lit(damping) * coalesce(col("m"), lit(0.0)), 12).as("r"))
+          round(lit((1 - Damping) / n) +
+            lit(Damping) * coalesce(col("m"), lit(0.0)), 12).as("r"))
         .localCheckpoint()
       i += 1
     }
     ranks
   }
 
-  /** (r17) The bounded (model-state-sized graph) face of [[pagerank]] as
-    * ONE driver loop: `bounded = true` means the node set is
-    * model-state-sized BY CONTRACT (event-type cardinality — the old
-    * form already counted N on the driver and coalesced every frame to
-    * one partition), so the |types|²-bounded edge list is collected once
-    * and the `iters` rounded iterations run driver-side — the
-    * distributed rendering paid ~13 driver-synchronous tiny jobs (edges/
-    * nodes/P checkpoints + one materialization per iteration) to move
-    * ≤|types|²-row frames through full stage machinery. Arithmetic is
-    * the contract's: same explicit dangling redistribution, same
+  /** The driver finish of [[pagerank]] over the collected distinct
+    * `nodes` and the [[indexedEdges]]: the distributed form's iterations
+    * on dense node indices — the transition-type graph would otherwise
+    * pay ~13 driver-synchronous tiny jobs to move ≤|types|² rows through
+    * full stage machinery. Same explicit dangling redistribution, same
     * per-iteration HALF_UP round-12 (java.math.BigDecimal — exactly
-    * Spark's `round`), and the iteration contract above already absorbs
-    * sum-order noise at every step, so the unbounded distributed face
-    * stays bit-equal (GraphSpec pins bounded ≡ unbounded).
+    * Spark's `round`); the iteration contract already absorbs sum-order
+    * noise at every step, and each sum still runs in edge order.
     */
-  private def pagerankBounded(edgesIn: DataFrame, nodesIn: DataFrame,
-      damping: Double, iters: Int): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val spark = edgesIn.sparkSession
+  private def pagerankOnDriver(nodesIn: DataFrame, nodes: Array[Any],
+      edges: (Array[Int], Array[Int], Array[Double])): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     def round12(x: Double): Double =
       java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-    val nodeType = nodesIn.schema("node").dataType
-    val nodeRows: Array[Any] = nodesIn.select(col("node")).distinct()
-      .collect().map(_.get(0))
-    val n = nodeRows.length.toDouble
-    val edgeRows = edgesIn.select(col("src"), col("dst"), col("n").cast("double"))
-      .collect().map(r => (r.get(0), r.get(1), r.getDouble(2)))
-    val outw = new java.util.HashMap[Any, Double]()
-    edgeRows.foreach { case (s, _, w) => outw.merge(s, w, (a, b) => a + b) }
-    val nodeSet = nodeRows.toSet
-    val danglingSrcs = nodeRows.filterNot(outw.containsKey(_))
-    var ranks: Map[Any, Double] = nodeRows.map(_ -> round12(1.0 / n)).toMap
+    val n = nodes.length
+    val (src, dst, w) = edges
+    // Rank flows only between nodes, as through the distributed form's
+    // joins; an edge out of a node adds to its out-weight wherever it ends.
+    val outw = new Array[Double](n)
+    val hasOut = new Array[Boolean](n)
+    var e = 0
+    while (e < src.length) {
+      if (src(e) >= 0) { outw(src(e)) += w(e); hasOut(src(e)) = true }
+      e += 1
+    }
+    val dangling = (0 until n).filterNot(hasOut).toArray
+    var ranks = Array.fill(n)(round12(1.0 / n))
     var i = 0
-    while (i < iters) {
-      val contrib = new java.util.HashMap[Any, Double]()
-      edgeRows.foreach { case (s, dst, w) =>
-        ranks.get(s).foreach { r =>
-          contrib.merge(dst, r * (w / outw.get(s)), (a, b) => a + b)
-        }
+    while (i < PrIters) {
+      val contrib = new Array[Double](n)
+      e = 0
+      while (e < src.length) {
+        if (src(e) >= 0 && dst(e) >= 0) contrib(dst(e)) += ranks(src(e)) * (w(e) / outw(src(e)))
+        e += 1
       }
       // Dangling nodes redistribute uniformly (the explicit 1/n edges).
-      val danglingMass = danglingSrcs.iterator.map(ranks(_)).sum
-      ranks = nodeRows.map { v =>
-        val m = Option(contrib.get(v)).getOrElse(0.0) + danglingMass / n
-        v -> round12((1 - damping) / n + damping * m)
-      }.toMap
+      val danglingMass = dangling.iterator.map(ranks(_)).sum
+      ranks = Array.tabulate(n)(v =>
+        round12((1 - Damping) / n + Damping * (contrib(v) + danglingMass / n)))
       i += 1
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("r",
-        org.apache.spark.sql.types.DoubleType, false)))
-    val rows: java.util.List[Row] =
-      nodeRows.map(v => Row(v, ranks(v))).toSeq.asJava
-    spark.createDataFrame(rows, schema)
+    // The distributed form's schema: Spark's `round` is nullable.
+    val schema = StructType(Seq(nodesIn.schema("node"),
+      StructField("r", DoubleType, nullable = true)))
+    pairFrame(nodesIn.sparkSession, schema, nodes, ranks)
   }
 
   /** Graded PageRank over the event-transition type graph: (node, pr),
@@ -235,9 +249,10 @@ object Graph {
   }
 
   /** Rows a driver finish may collect: at or under it, the near-dup
-    * components ([[Dedup.nearDupComponents]]) and the triangle census
-    * ([[triangleCountsDegreeOriented]]) collect their graph once and
-    * finish on the driver; over it, they run their distributed forms.
+    * components ([[Dedup.nearDupComponents]]), the triangle census
+    * ([[triangleCountsDegreeOriented]]) and [[pagerank]] (edges and nodes
+    * each) collect their graph once and finish on the driver; over it,
+    * they run their distributed forms.
     * At fixture scale the distributed forms cost jobs, not rows (~11k
     * edges, 16–28 jobs per key), and every job pays a fixed cost.
     *
@@ -249,7 +264,12 @@ object Graph {
     * distinct docs ≈ 1.5–2.3 s for the whole call (sort + union-find);
     * triangles are bounded by m·√(2m) wedge checks, and the dense worst
     * case — a 1,448-node clique, m = 1,047,628, 5.0·10⁸ triangles —
-    * takes ≈ 2.7 s for the whole call.
+    * takes ≈ 2.7 s for the whole call. PageRank at the budget (2^20
+    * edges over 2^20 string nodes, cycles or half of them dangling)
+    * completes in a 512 MB heap at its limit — heap use after GC
+    * reaches 509 MB — in 15–21 s for the whole call, 11.5–16 s with
+    * 1 GB; the 10 × 2^20 BigDecimal round-12s take ≈ 10 s of it. On the
+    * cycles the distributed form takes ≈ 48 s.
     */
   val DriverFinishRows: Int = 1 << 20
 
@@ -279,17 +299,17 @@ object Graph {
     }.collect().headOption.flatMap(Option(_))
   }
 
-  /** A DataFrame of (c0(i), c1(i)) rows under `schema` (two LongType
-    * columns), shipped as one primitive-array chunk per default-parallelism
-    * slice — the driver finishes' output, without a Row per result.
+  /** A DataFrame of (c0(i), c1(i)) rows under `schema`, shipped as one
+    * array chunk per default-parallelism slice — the driver finishes'
+    * output, without a Row per result on the driver.
     */
-  private[graft] def longFrame(spark: SparkSession,
+  private[graft] def pairFrame[A, B](spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      c0: Array[Long], c1: Array[Long]): DataFrame = {
+      c0: Array[A], c1: Array[B]): DataFrame = {
     val k = math.max(1, math.min(c0.length, spark.sparkContext.defaultParallelism))
     val chunks = (0 until k).map { j =>
       val (from, to) = ((c0.length.toLong * j / k).toInt, (c0.length.toLong * (j + 1) / k).toInt)
-      (java.util.Arrays.copyOfRange(c0, from, to), java.util.Arrays.copyOfRange(c1, from, to))
+      (c0.slice(from, to), c1.slice(from, to))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(chunks, k).flatMap {
       case (x, y) => x.indices.iterator.map(i => Row(x(i), y(i)))
@@ -442,17 +462,19 @@ object Graph {
       StructField("doc_id", LongType, e.schema("a").nullable || e.schema("b").nullable),
       StructField("n_triangles", LongType, nullable = false)))
     val hit = (0 until n).filter(tri(_) > 0).toArray
-    longFrame(e.sparkSession, schema, hit.map(ids(_)), hit.map(tri(_)))
+    pairFrame(e.sparkSession, schema, hit.map(ids(_)), hit.map(tri(_)))
   }
 
   /** Graded triangle census of the document near-dup graph at τ = 0.97:
     * (doc_id, n_triangles) for every document in ≥ 1 triangle. Edges come
     * from the SAME banded MinHash-LSH pipeline as q_neardup_lsh (exact
     * Jaccard confirm, so the edge set equals the brute-force oracle's).
+    * The pair stage runs `Auto` shape dispatch, like q_neardup_components:
+    * Broadcast under the doc cap, the no-broadcast Salted form past it.
     */
   val qGraphTriangles: Q = (s, d) => {
     val edges = Dedup.lshNearDupPairs(Dedup.minhashBands(s, d), "toks",
-        97, 100, TriangleTau, Dedup.Broadcast, ordered = false)
+        97, 100, TriangleTau, Dedup.Auto(), ordered = false)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     triangleCountsDegreeOriented(edges)
       .orderBy(desc("n_triangles"), col("doc_id"))

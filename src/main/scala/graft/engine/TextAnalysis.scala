@@ -343,7 +343,7 @@ object TextAnalysis {
       .orderBy("doc_a")
   }
 
-  /** Graded end-to-end curation composition — the PipelineMain core as a
+  /** Graded end-to-end curation composition — quality gate then dedup as a
     * single oracled key: per language, how many documents survive (a) the
     * quality gate and (b) set-normalized dedup among the survivors. The
     * quality gate uses INTEGER cross-multiplication only (≥5 tokens and

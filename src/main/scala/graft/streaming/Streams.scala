@@ -1253,7 +1253,7 @@ object Streams {
     *
     * Dedup policy, in order: (1) within the batch, locally-minimal docs
     * survive (every doc that is the larger id of some ≥τ pair drops —
-    * the PipelineMain pair policy); (2) survivors that near-dup ANY
+    * per-pair `doc_b` dropping); (2) survivors that near-dup ANY
     * corpus doc drop (the corpus, being earlier, always wins —
     * first-arrival-wins across batches, exactly the streaming dedup
     * semantic of `dropDuplicatesWithinWatermark` lifted to NEAR

@@ -72,7 +72,6 @@ object SemDedupPlant {
   val Dim = 64
   val S1 = 100000.0
   val S2 = 1000.0
-  val MembersPerSite = graft.engine.SemDedup.TargetCellSize // 64
 
   /** i-th positive integer not divisible by 25 (strictly increasing). */
   def id(i: Long): Long = i + 1 + i / 24

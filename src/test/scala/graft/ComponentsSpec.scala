@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.engine.Dedup
+import graft.engine.{Dedup, Graph}
 
 /** nearDupComponents: connected components over a pair list — the
   * cluster-then-keep-canonical step a principled dedup pipeline needs
@@ -21,15 +21,14 @@ class ComponentsSpec extends AnyFunSuite {
     rows.toMap
   }
 
-  /** The driver finish (budget default) against the distributed loop
+  /** The driver finish (default budget) against the distributed loop
     * (budget 0 forces it): same rows, same schema. maxIter binds only the
     * distributed loop, which throws before its first round at maxIter 0
     * — so a result from `maxIter = 0` proves the driver finish ran.
     */
-  private def assertFinishesAgree(pairs: org.apache.spark.sql.DataFrame,
-      merge: Boolean = false): Unit = {
-    val driver = Dedup.nearDupComponents(pairs, maxIter = 0, merge = merge)
-    val distributed = Dedup.componentsWithin(pairs, 30, None, merge, budget = 0)
+  private def assertFinishesAgree(pairs: org.apache.spark.sql.DataFrame): Unit = {
+    val driver = Dedup.componentsWithin(pairs, 0, None, Graph.DriverFinishRows)
+    val distributed = Dedup.componentsWithin(pairs, Dedup.ComponentsMaxIter, None, budget = 0)
     assert(driver.schema == distributed.schema,
       s"${driver.schema.treeString} vs ${distributed.schema.treeString}")
     val (d, s) = (driver.as[(Long, Long)].collect().sorted.toSeq,
@@ -51,7 +50,7 @@ class ComponentsSpec extends AnyFunSuite {
       Seq((10L, 20L))).toDF("doc_a", "doc_b"))
     assertFinishesAgree(soup.toDF("doc_a", "doc_b"))
     assertFinishesAgree(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L),
-      (21L, 22L)).toDF("doc_a", "doc_b"), merge = true)
+      (21L, 22L)).toDF("doc_a", "doc_b"))
   }
 
   test("driver finish equals the distributed loop on nullable fixture pairs") {
@@ -66,9 +65,9 @@ class ComponentsSpec extends AnyFunSuite {
     // finish (no rounds) returns the single component.
     val chain = (1L to 39L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val e = intercept[IllegalStateException](
-      Dedup.componentsWithin(chain, 1, None, merge = false, budget = 38))
+      Dedup.componentsWithin(chain, 1, None, budget = 38))
     assert(e.getMessage.contains("did not converge"))
-    val atBudget = Dedup.componentsWithin(chain, 1, None, merge = false, budget = 39)
+    val atBudget = Dedup.componentsWithin(chain, 1, None, budget = 39)
     assert(atBudget.as[(Long, Long)].collect().toMap == (1L to 40L).map(_ -> 1L).toMap)
   }
 
@@ -85,7 +84,7 @@ class ComponentsSpec extends AnyFunSuite {
       Seq((20L, 21L), (20L, 22L), (21L, 22L)) ++    // clique
       Seq((10L, 20L))                               // cross-link
     ).toDF("doc_a", "doc_b")
-    val prod = Dedup.componentsWithin(pairs, 30, None, merge = false, budget = 0)
+    val prod = Dedup.componentsWithin(pairs, 30, None, budget = 0)
       .as[(Long, Long)].collect().toMap
     // Full-frontier replay of the same loop.
     val edges = pairs.select(explode(array(
@@ -98,7 +97,7 @@ class ComponentsSpec extends AnyFunSuite {
     var it = 0
     var converged = false
     while (it < 30 && !converged) {
-      val next = Dedup.componentsRound(edges, labels, merge = false, labels)
+      val next = Dedup.componentsRound(edges, labels, labels)
         .localCheckpoint()
       converged = next.where(col("__moved")).limit(1).count() == 0
       labels = next.drop("__moved", "__changed")
@@ -143,23 +142,10 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // budget 0: the rounds of the distributed loop checkpoint there too.
     assert(Dedup.componentsWithin(pairs.toDF("doc_a", "doc_b"), 30, Some(dir),
-      merge = false, budget = 0).as[(Long, Long)].collect().toMap == got)
+      budget = 0).as[(Long, Long)].collect().toMap == got)
     val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(written > 0, s"no checkpoint files under $dir")
-  }
-
-  test("merge (no-broadcast) rounds produce identical components") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L))
-    val plain = Dedup.nearDupComponents(pairs.toDF("doc_a", "doc_b"))
-      .as[(Long, Long)].collect().toMap
-    // budget 0: the merge hint only shapes the distributed rounds.
-    val merged = Dedup.componentsWithin(pairs.toDF("doc_a", "doc_b"), 30, None,
-        merge = true, budget = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(merged == plain)
-    assert(plain == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
   test("end-to-end: components over q_neardup_lsh pairs cover every paired doc") {

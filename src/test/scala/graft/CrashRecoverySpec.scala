@@ -17,15 +17,17 @@ import graft.streaming.Streams.Event
   * Deleting `commits/N` after a batch ran reproduces the crash window
   * "died after the sink/state work, before the commit marker" — the
   * worst seam, because restart MUST re-execute batch N (same WAL
-  * offsets, state restored to version N−1 from the RocksDB changelog)
+  * offsets, state restored to version N−1 from the RocksDB checkpoint)
   * and the file sink must recognize the batch id in its own
   * `_spark_metadata` transaction log and skip the double write.
   *
   * Each test asserts the post-recovery output equals the batch twin on
   * the full input as a MULTISET (sorted-row equality, not set equality)
   * — a lost row (state under-recovered) and a duplicated row (sink
-  * re-committed) both fail. All under RocksDB + changelog
-  * checkpointing, the at-scale configuration.
+  * re-committed) both fail. All under the state configuration of
+  * [[Streams.sessionConf]], which every streaming main runs: the RocksDB
+  * provider with Spark's default snapshot checkpointing.
+  * StateProviderParitySpec covers changelog checkpointing.
   */
 class CrashRecoverySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -36,8 +38,6 @@ class CrashRecoverySpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory(p).toString
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val ChangelogKey =
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
   private val Rocks =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -71,32 +71,30 @@ class CrashRecoverySpec extends AnyFunSuite {
   /** Two lifetimes with a lost commit between them: lifetime 1 processes
     * b1 then b2 (two committed batches), the crash erases batch 2's
     * commit marker, lifetime 2 recovers from the same checkpoint —
-    * re-executing b2 against changelog-restored state — then processes
+    * re-executing b2 against restored state — then processes
     * b3. Returns the final parquet output.
     */
   private def crashRun(name: String, stream: Dataset[Event] => DataFrame,
       b1: Seq[Event], b2: Seq[Event], b3: Seq[Event]): DataFrame =
     withConf(ProviderKey, Rocks) {
-      withConf(ChangelogKey, "true") {
-        val ckpt = tmp(s"graft-crash-$name-ckpt")
-        val out = tmp(s"graft-crash-$name-out")
-        val ms1 = MemoryStream[Event](spark)
-        val q1 = Streams.start(stream(ms1.toDS()), Streams.ParquetStreamSink(out, ckpt))
-        try {
-          ms1.addData(b1); q1.processAllAvailable()
-          ms1.addData(b2); q1.processAllAvailable()
-        } finally q1.stop()
-        val lost = injectCrash(ckpt)
-        assert(lost == 1L, s"expected to lose batch 1's commit, lost $lost")
-        // Fresh source pre-seeded with the processed prefix in the SAME
-        // addData granularity, so the WAL offsets of the replayed batch
-        // resolve to exactly b2's rows.
-        val ms2 = MemoryStream[Event](spark)
-        ms2.addData(b1); ms2.addData(b2)
-        val q2 = Streams.start(stream(ms2.toDS()), Streams.ParquetStreamSink(out, ckpt))
-        try { ms2.addData(b3); q2.processAllAvailable() } finally q2.stop()
-        spark.read.parquet(out)
-      }
+      val ckpt = tmp(s"graft-crash-$name-ckpt")
+      val out = tmp(s"graft-crash-$name-out")
+      val ms1 = MemoryStream[Event](spark)
+      val q1 = Streams.start(stream(ms1.toDS()), Streams.ParquetStreamSink(out, ckpt))
+      try {
+        ms1.addData(b1); q1.processAllAvailable()
+        ms1.addData(b2); q1.processAllAvailable()
+      } finally q1.stop()
+      val lost = injectCrash(ckpt)
+      assert(lost == 1L, s"expected to lose batch 1's commit, lost $lost")
+      // Fresh source pre-seeded with the processed prefix in the SAME
+      // addData granularity, so the WAL offsets of the replayed batch
+      // resolve to exactly b2's rows.
+      val ms2 = MemoryStream[Event](spark)
+      ms2.addData(b1); ms2.addData(b2)
+      val q2 = Streams.start(stream(ms2.toDS()), Streams.ParquetStreamSink(out, ckpt))
+      try { ms2.addData(b3); q2.processAllAvailable() } finally q2.stop()
+      spark.read.parquet(out)
     }
 
   /** Multiset equality via sorted row renders. */

@@ -28,18 +28,42 @@ class GraphSpec extends AnyFunSuite {
     assert(math.abs(r - 1.0) < 1e-9, s"rank mass $r != 1")
   }
 
-  test("pagerank unbounded mode (natural partitioning) equals the bounded graded shape") {
-    // bounded=false drops the model-state coalesce(1) and runs every
-    // per-iteration materialization distributed — same loop body, so the
-    // ranks must match the bounded form bit-for-bit (incl. the dangling
-    // node's uniform redistribution). GraphScale proves this mode at 97M
-    // nodes; this pins the two shapes against each other at fixture size.
-    val e = edges(("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 3.0), ("c", "a", 1.0),
-      ("d", "a", 2.0)) // e dangles nothing; add an isolated-ish feeder
-    val ns = nodes("a", "b", "c", "d", "e") // e is dangling (no out-edges)
-    val b = Graph.pagerank(e, ns).orderBy("node").collect().toSeq
-    val u = Graph.pagerank(e, ns, bounded = false).orderBy("node").collect().toSeq
-    assert(b == u)
+  // Five nodes and five edges; e is dangling (no out-edges).
+  private def prEdges = edges(("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 3.0),
+    ("c", "a", 1.0), ("d", "a", 2.0))
+  private def prNodes = nodes("a", "b", "c", "d", "e")
+
+  /** Whether `df` is the driver finish's output: the distributed loop
+    * ends in a local checkpoint, the driver finish ships its arrays. */
+  private def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => !r.rdd.isCheckpointed
+      case _ => false
+    }
+
+  test("pagerank driver finish equals pagerankDistributed: rows and schema") {
+    // The distributed loop is the path past the budget (and GraphScale's
+    // at 97M nodes); budget 0 forces it through the seam. Same
+    // iterations, same per-iteration rounding, so the ranks match
+    // bit-for-bit, the dangling node's uniform redistribution included.
+    val driver = Graph.pagerank(prEdges, prNodes)
+    val dist = Graph.pagerankWithin(prEdges, prNodes, budget = 0)
+    assert(onDriver(driver) && !onDriver(dist))
+    assert(driver.schema == dist.schema,
+      s"${driver.schema.treeString} vs ${dist.schema.treeString}")
+    assert(driver.orderBy("node").collect().toSeq == dist.orderBy("node").collect().toSeq)
+  }
+
+  test("a pagerank input over the driver budget takes the distributed loop") {
+    // At the budget both the 5 nodes and the 5 edges fit; one under it,
+    // either side alone over it sends the run to the distributed loop.
+    assert(onDriver(Graph.pagerankWithin(prEdges, prNodes, budget = 5)))
+    assert(!onDriver(Graph.pagerankWithin(prEdges, prNodes, budget = 4)))
+    val fewNodes = nodes("a", "b", "c", "d") // 5 edges, 4 nodes
+    val dist = Graph.pagerankWithin(prEdges, fewNodes, budget = 4)
+    assert(!onDriver(dist))
+    assert(dist.orderBy("node").collect().toSeq ==
+      Graph.pagerank(prEdges, fewNodes).orderBy("node").collect().toSeq)
   }
 
   test("pagerank ranks a pure sink above its feeders in a star graph") {

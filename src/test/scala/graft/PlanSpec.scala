@@ -109,11 +109,10 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("forced-salted dedup→components composition is broadcast-free end to end") {
+  test("forced-salted q_neardup_components pair stage is broadcast-free") {
     // The graded q_neardup_components path = Auto-shaped LSH pairs + the
-    // clustering rounds. Past the doc cap, the pair stage must run the
-    // salted no-broadcast shape AND every per-round join must avoid
-    // building O(docs) label/edge frames in executor memory (merge=true).
+    // components finish. Past the doc cap, the pair stage must run the
+    // salted no-broadcast shape.
     import org.apache.spark.sql.functions._
     import graft.engine.Dedup
     val pairs = Dedup.lshNearDupPairs(Dedup.minhashBands(spark, TestSpark.sfDir),
@@ -121,24 +120,6 @@ class PlanSpec extends AnyFunSuite {
       .select(col("doc_a"), col("doc_b"))
     val pairsPlan = pairs.queryExecution.executedPlan.toString
     assert(!pairsPlan.contains("Broadcast"), pairsPlan)
-    // Checkpointed edge/label inputs mirror the loop's persistRound state —
-    // exactly the small-stats case where the planner would broadcast
-    // without the merge hints.
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))).localCheckpoint()
-    val labels = edges.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("component"))
-      .select(col("src").as("doc_id"), col("component")).localCheckpoint()
-    // Round 1 joins the full label set; a late round joins only the few
-    // docs that changed, whose tiny checkpointed stats are the strongest
-    // pull toward a broadcast — the merge hints must hold there too.
-    for ((what, frontier) <- Seq("round 1" -> labels,
-        "late round" -> labels.limit(1).localCheckpoint())) {
-      val p = Dedup.componentsRound(edges, labels, merge = true, frontier)
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("Broadcast"), s"$what: $p")
-      assert(p.contains("SortMergeJoin"), s"$what: $p")
-    }
   }
 
   test("q_grouped_topk_agg aggregates in two phases (map-side partial below the exchange)") {

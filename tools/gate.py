@@ -236,8 +236,23 @@ def failures(art: dict) -> List[str]:
     return sorted(k for k, v in art.items() if k != "_meta" and not passes(v))
 
 
+def heap(xmx: str, meminfo: str = "/proc/meminfo") -> str:
+    """`xmx` (like "48g" or "512m"), capped at half the box's MemTotal: a
+    heap the box cannot back grows past physical memory and the kernel's
+    out-of-memory killer ends the JVM mid-dump."""
+    units = {"m": 1, "g": 1024}
+    want_mb = int(xmx[:-1]) * units[xmx[-1].lower()]
+    with open(meminfo) as f:
+        total_kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    cap_mb = total_kb // 2048
+    return xmx if want_mb <= cap_mb else f"{cap_mb}m"
+
+
 def java(cp: str, xmx: str, main: str, *args: str, env=None, **kw):
-    cmd = ["java", "@tools/jdk17-add-opens.args", f"-Xmx{xmx}", "-cp", cp, main, *args]
+    used = heap(xmx)
+    print(f"java {main}: -Xmx{used}" + (f" (declared {xmx}, capped at half of MemTotal)"
+                                        if used != xmx else ""), flush=True)
+    cmd = ["java", "@tools/jdk17-add-opens.args", f"-Xmx{used}", "-cp", cp, main, *args]
     return subprocess.run(cmd, env={**os.environ, **(env or {})}, **kw)
 
 

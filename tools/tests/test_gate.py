@@ -127,3 +127,18 @@ class ShardSplit(unittest.TestCase):
 
 if __name__ == "__main__":
     unittest.main()
+
+
+class Heap(unittest.TestCase):
+    def heap(self, xmx, total_kb):
+        with tempfile.NamedTemporaryFile("w", suffix="meminfo") as f:
+            f.write(f"MemTotal:       {total_kb} kB\nMemFree:        1024 kB\n")
+            f.flush()
+            return gate.heap(xmx, f.name)
+
+    def test_a_heap_over_half_of_memtotal_is_capped_there(self):
+        self.assertEqual(self.heap("48g", 16 * 1024 * 1024), "8192m")
+
+    def test_a_heap_that_fits_is_kept_as_declared(self):
+        self.assertEqual(self.heap("6g", 16 * 1024 * 1024), "6g")
+        self.assertEqual(self.heap("512m", 2 * 1024 * 1024), "512m")
