@@ -105,33 +105,41 @@ object Graph {
     val edges = edgesIn.localCheckpoint()
     val nodes = nodesIn.select(col("node")).distinct().localCheckpoint()
     val n = nodes.count().toDouble
-    val outw = edges.groupBy(col("src")).agg(sum(col("n")).as("w"))
-    val real = edges.join(outw, "src")
-      .select(col("src"), col("dst"), (col("n") / col("w")).as("p"))
+    // Transition frame, one row per edge — scanned once per iteration.
+    val p = pagerankTransitions(edges).localCheckpoint()
+    // A dangling node spreads its rank uniformly over all nodes; that
+    // is one scalar per iteration (their rank sum / n), not D·N edges.
     val dangling = nodes
       .join(edges.select(col("src")).distinct(), col("node") === col("src"), "left_anti")
-      .crossJoin(nodes.select(col("node").as("dst")))
-      .select(col("node").as("src"), col("dst"), lit(1.0 / n).as("p"))
-    // Row-stochastic transition frame — scanned once per iteration.
-    val p = real.unionByName(dangling).localCheckpoint()
+      .localCheckpoint()
     var ranks = nodes.select(col("node"), round(lit(1.0 / n), 12).as("r"))
     var i = 0
     while (i < PrIters) {
       val contrib = ranks.join(p, col("node") === col("src"))
         .groupBy(col("dst")).agg(sum(col("r") * col("p")).as("m"))
         .select(col("dst").as("cnode"), col("m"))
+      val spread = ranks.join(dangling, "node")
+        .agg((coalesce(sum(col("r")), lit(0.0)) / n).as("d"))
       // Eager tiny materialization per iteration: keeps the loop's plan
       // depth constant (a 10-deep nested join/agg plan costs more in
       // analysis than these ≤|nodes|-row jobs cost to run) — the same
       // reason Dedup.nearDupComponents checkpoints every round.
-      ranks = nodes.join(contrib, col("node") === col("cnode"), "left")
+      ranks = nodes.join(contrib, col("node") === col("cnode"), "left").crossJoin(spread)
         .select(col("node"),
           round(lit((1 - Damping) / n) +
-            lit(Damping) * coalesce(col("m"), lit(0.0)), 12).as("r"))
+            lit(Damping) * (coalesce(col("m"), lit(0.0)) + col("d")), 12).as("r"))
         .localCheckpoint()
       i += 1
     }
     ranks
+  }
+
+  /** [[pagerankDistributed]]'s row-stochastic transition frame over the
+    * real edges: (src, dst, p = n / src's out-weight), one row per edge.
+    */
+  private[graft] def pagerankTransitions(edges: DataFrame): DataFrame = {
+    val outw = edges.groupBy(col("src")).agg(sum(col("n")).as("w"))
+    edges.join(outw, "src").select(col("src"), col("dst"), (col("n") / col("w")).as("p"))
   }
 
   /** The driver finish of [[pagerank]] over the collected distinct

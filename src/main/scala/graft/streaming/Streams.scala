@@ -1007,12 +1007,28 @@ object Streams {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Session confs transformWithState needs (call before building the
-    * streaming query; harmless for every other operator).
+  /** Session confs every streaming query here runs on (call before
+    * building the query):
+    *  - the RocksDB state store provider, which transformWithState needs
+    *    and every other stateful operator accepts;
+    *  - [[CheckpointFiles]] as the checkpoint file manager, unless the
+    *    session already names one (a deployment's own manager, common on
+    *    object stores, wins). On local paths it writes through Hadoop's
+    *    FileSystem API instead of FileContext: without Hadoop's native
+    *    library FileContext spawns a shell per permission or status call,
+    *    so one atomic checkpoint write took 38–52 ms and 20 child
+    *    processes against 9–12 ms and 4 (4 vCPUs, Hadoop 3.4.2). A live
+    *    dedup batch commits an offset entry, a commit entry, a sink log
+    *    entry and four RocksDB snapshot uploads, so this was most of its
+    *    fixed cost: on perfbench's `stream_live` the offsets and commits
+    *    logs fell from 61.5 to 14.5 ms a batch, the RocksDB commit from
+    *    483 to 222 ms, and the median event latency from 905 to 658 ms.
     */
   def sessionConf(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    if (spark.conf.getOption(CheckpointFiles.ConfKey).isEmpty)
+      spark.conf.set(CheckpointFiles.ConfKey, classOf[CheckpointFiles].getName)
     spark
   }
 
@@ -1629,6 +1645,17 @@ object Streams {
     * size (keys held within the watermark = the WindowStore analogue),
     * eviction progress, late rows dropped behind the watermark (summed
     * over the state operators), and the current watermark.
+    *
+    * Where the batch's time went: the progress `durationMs` phases
+    * (`triggerExecution` is the whole batch; `addBatch` runs the plan and
+    * commits the state stores and the sink; `walCommit` and
+    * `commitOffsets` write the offsets and commits logs), and the state
+    * stores' commit — `commitTimeMs` and its RocksDB parts (memtable
+    * flush, compaction, native checkpoint, file sync, snapshot zip
+    * upload, changelog commit). The commit figures are summed over the
+    * state operators and their store instances, which commit in
+    * parallel tasks, so they can exceed the batch's wall time. A phase
+    * or a part the batch did not report reads 0.
     */
   final case class QueryMetrics(
       batchId: Long,
@@ -1641,10 +1668,26 @@ object Streams {
       stateRowsRemoved: Long,
       stateMemoryBytes: Long,
       droppedByWatermark: Long,
-      watermark: Option[String])
+      watermark: Option[String],
+      triggerExecutionMs: Long,
+      addBatchMs: Long,
+      walCommitMs: Long,
+      commitOffsetsMs: Long,
+      queryPlanningMs: Long,
+      latestOffsetMs: Long,
+      stateCommitMs: Long,
+      rocksdbCommitFlushMs: Long,
+      rocksdbCommitCompactMs: Long,
+      rocksdbCommitCheckpointMs: Long,
+      rocksdbCommitFileSyncMs: Long,
+      rocksdbSaveZipFilesMs: Long,
+      rocksdbChangelogCommitMs: Long)
 
   private[graft] def toMetrics(p: org.apache.spark.sql.streaming.StreamingQueryProgress): QueryMetrics = {
     val ops = p.stateOperators.toIndexedSeq
+    def phase(name: String): Long = Option(p.durationMs.get(name)).map(_.longValue).getOrElse(0L)
+    def custom(name: String): Long =
+      ops.map(o => Option(o.customMetrics.get(name)).map(_.longValue).getOrElse(0L)).sum
     QueryMetrics(
       batchId = p.batchId,
       numInputRows = p.numInputRows,
@@ -1656,7 +1699,20 @@ object Streams {
       stateRowsRemoved = ops.map(_.numRowsRemoved).sum,
       stateMemoryBytes = ops.map(_.memoryUsedBytes).sum,
       droppedByWatermark = ops.map(_.numRowsDroppedByWatermark).sum,
-      watermark = Option(p.eventTime.get("watermark")))
+      watermark = Option(p.eventTime.get("watermark")),
+      triggerExecutionMs = phase("triggerExecution"),
+      addBatchMs = phase("addBatch"),
+      walCommitMs = phase("walCommit"),
+      commitOffsetsMs = phase("commitOffsets"),
+      queryPlanningMs = phase("queryPlanning"),
+      latestOffsetMs = phase("latestOffset"),
+      stateCommitMs = ops.map(_.commitTimeMs).sum,
+      rocksdbCommitFlushMs = custom("rocksdbCommitFlushLatency"),
+      rocksdbCommitCompactMs = custom("rocksdbCommitCompactLatency"),
+      rocksdbCommitCheckpointMs = custom("rocksdbCommitCheckpointLatency"),
+      rocksdbCommitFileSyncMs = custom("rocksdbCommitFileSyncLatencyMs"),
+      rocksdbSaveZipFilesMs = custom("rocksdbSaveZipFilesLatencyMs"),
+      rocksdbChangelogCommitMs = custom("rocksdbChangeLogWriterCommitLatencyMs"))
   }
 
   /** Latest completed micro-batch's metrics (None before the first batch

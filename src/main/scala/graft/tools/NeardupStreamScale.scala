@@ -170,7 +170,7 @@ object NeardupStreamScale {
         s""""only_stream":${d.onlyA},"only_fold":${d.onlyB},"parity":$parity,""" +
         s""""cross_copy_buckets":$crossCopyBuckets,"dropped_by_watermark":${st.droppedByWatermark},""" +
         s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},"state_bounded":$stateOk,""" +
-        s""""wall_sec":${math.round(wall)}}""")
+        s"""${st.phasesJson},"wall_sec":${math.round(wall)}}""")
       spark.stop()
       if (!parity || st.droppedByWatermark != 0 || !stateOk) sys.exit(1)
     } else {
@@ -193,7 +193,7 @@ object NeardupStreamScale {
         s""""dropped_by_watermark":$dropped,""" +
         s""""peak_state_rows_clean":${clean.peakStateRows},"peak_state_rows_crash":${crash.peakStateRows},""" +
         s""""peak_state_mem_mb":${math.max(clean.peakStateBytes, crash.peakStateBytes) / 1000000},"state_bounded":$stateOk,""" +
-        s""""wall_sec":${math.round(wall)}}""")
+        s""""clean":{${clean.phasesJson}},"crash":{${crash.phasesJson}},"wall_sec":${math.round(wall)}}""")
       spark.stop()
       if (!parity || !crash.crashed || dropped != 0 || !stateOk) sys.exit(1)
     }

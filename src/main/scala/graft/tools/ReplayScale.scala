@@ -73,7 +73,7 @@ object ReplayScale {
       s""""crash_injected":${st.crashed},"crash_missed":$crashMissed,"rows_before_kill":${st.rowsBeforeKill},""" +
       s""""survivors_stream":${d.nA},"survivors_batch":${d.nB},"only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
       s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +
-      s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},""" +
+      s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},${st.phasesJson},""" +
       s""""wall_sec":${f"$wall%.1f"},"pass":$pass}}""")
     spark.stop()
     if (!pass) sys.exit(1)

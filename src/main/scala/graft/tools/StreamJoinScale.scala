@@ -156,7 +156,7 @@ object StreamJoinScale {
         s""""only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
         s""""null_padded_left_rows":${f.nullLeft},"null_padded_rows":${f.nullRows},""" +
         s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +
-        s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},""" +
+        s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},${st.phasesJson},""" +
         s""""crash_injected":${st.crashed},"rows_before_kill":${st.rowsBeforeKill},""" +
         s""""wall_sec":${f"${f.wallSec}%.1f"}}""")
     }

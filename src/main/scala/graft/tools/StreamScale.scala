@@ -88,11 +88,18 @@ object StreamScale {
     }
   }
 
-  /** What one [[killAndRestart]] run observed. Peaks and drops come from
-    * [[Streams.QueryMetrics]], one progress per batch id.
+  /** What one [[killAndRestart]] run observed. Peaks, drops and the
+    * batch phases come from [[Streams.QueryMetrics]], one progress per
+    * batch id; each phase is summed over the batches that read input.
     */
   final case class RunStats(crashed: Boolean, rowsBeforeKill: Long, peakStateRows: Long,
-      peakStateBytes: Long, droppedByWatermark: Long, batches: Long)
+      peakStateBytes: Long, droppedByWatermark: Long, batches: Long, triggerMs: Long,
+      addBatchMs: Long, walCommitMs: Long, commitOffsetsMs: Long, stateCommitMs: Long) {
+    /** The phase totals as one JSON member, for the gates' result lines. */
+    def phasesJson: String =
+      s""""phase_ms":{"trigger":$triggerMs,"add_batch":$addBatchMs,"wal_commit":$walCommitMs,""" +
+        s""""commit_offsets":$commitOffsetsMs,"state_commit":$stateCommitMs}"""
+  }
 
   /** The scale gates' exactly-once seam: stream `query()` into a parquet
     * sink on fresh `outDir`/`ckpt` under Trigger.AvailableNow; once the
@@ -125,9 +132,12 @@ object StreamScale {
       tracker.fold(q.recentProgress.toSeq)
     } finally spark.streams.removeListener(tracker)
     val ms = tracker.progresses.map(Streams.toMetrics)
+    val data = ms.filter(_.numInputRows > 0)
+    def total(f: Streams.QueryMetrics => Long) = data.map(f).sum
     RunStats(crashed, rowsBeforeKill, ms.map(_.stateRows).maxOption.getOrElse(0L),
       ms.map(_.stateMemoryBytes).maxOption.getOrElse(0L), ms.map(_.droppedByWatermark).sum,
-      ms.count(_.numInputRows > 0).toLong)
+      data.size.toLong, total(_.triggerExecutionMs), total(_.addBatchMs), total(_.walCommitMs),
+      total(_.commitOffsetsMs), total(_.stateCommitMs))
   }
 
   /** Two-way multiset difference: rows only in `a`, rows only in `b`
@@ -331,7 +341,7 @@ object StreamScale {
         s""""parity":$ok,"rows_stream":$nStream,"keys_lower_bound":$nKeys,""" +
         s""""gap_ideal_upper_bound":$gapIdeal,"peak_state_rows":${st.peakStateRows},""" +
         s""""peak_state_mem_mb":${st.peakStateBytes / 1000000},"dropped_by_watermark":${st.droppedByWatermark},""" +
-        s""""batches":${st.batches},"wall_sec":${f"${(System.nanoTime() - t0) / 1e9}%.1f"}}""")
+        s""""batches":${st.batches},${st.phasesJson},"wall_sec":${f"${(System.nanoTime() - t0) / 1e9}%.1f"}}""")
       if (!ok) evictFail = true
     }
 
@@ -445,7 +455,8 @@ object StreamScale {
       println(s"""{"key":"$key","parity":${d.equal},"rows_stream":${d.nA},""" +
         s""""rows_batch":${d.nB},"only_stream":${d.onlyA},"only_batch":${d.onlyB},""" +
         s""""peak_state_rows":${st.peakStateRows},"peak_state_mem_mb":${st.peakStateBytes / 1000000},""" +
-        s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},"wall_sec":${f"$wallSec%.1f"}}""")
+        s""""dropped_by_watermark":${st.droppedByWatermark},"batches":${st.batches},${st.phasesJson},""" +
+        s""""wall_sec":${f"$wallSec%.1f"}}""")
     }
     val pass = results.forall(r => r.diff.equal && r.run.droppedByWatermark == 0) && !evictFail
     println(s"""{"stream_scale":{"src":${graft.Verify.jsonString(src)},"slices":$slices,"pass":$pass}}""")

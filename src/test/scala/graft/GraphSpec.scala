@@ -41,17 +41,29 @@ class GraphSpec extends AnyFunSuite {
       case _ => false
     }
 
+  // Eight nodes, half of them dangling (e, f, g, h).
+  private def halfDanglingEdges = edges(("a", "b", 1.0), ("a", "c", 2.0), ("b", "e", 1.0),
+    ("c", "f", 1.0), ("d", "g", 1.0))
+  private def halfDanglingNodes = nodes("a", "b", "c", "d", "e", "f", "g", "h")
+
   test("pagerank driver finish equals pagerankDistributed: rows and schema") {
     // The distributed loop is the path past the budget (and GraphScale's
     // at 97M nodes); budget 0 forces it through the seam. Same
     // iterations, same per-iteration rounding, so the ranks match
-    // bit-for-bit, the dangling node's uniform redistribution included.
-    val driver = Graph.pagerank(prEdges, prNodes)
-    val dist = Graph.pagerankWithin(prEdges, prNodes, budget = 0)
-    assert(onDriver(driver) && !onDriver(dist))
-    assert(driver.schema == dist.schema,
-      s"${driver.schema.treeString} vs ${dist.schema.treeString}")
-    assert(driver.orderBy("node").collect().toSeq == dist.orderBy("node").collect().toSeq)
+    // bit-for-bit, the dangling nodes' uniform redistribution included.
+    for ((es, ns) <- Seq((prEdges, prNodes), (halfDanglingEdges, halfDanglingNodes))) {
+      val driver = Graph.pagerank(es, ns)
+      val dist = Graph.pagerankWithin(es, ns, budget = 0)
+      assert(onDriver(driver) && !onDriver(dist))
+      assert(driver.schema == dist.schema,
+        s"${driver.schema.treeString} vs ${dist.schema.treeString}")
+      assert(driver.orderBy("node").collect().toSeq == dist.orderBy("node").collect().toSeq)
+      val mass = dist.select(sum(col("r"))).as[Double].head()
+      assert(math.abs(mass - 1.0) < 1e-9, s"rank mass $mass != 1")
+      // Dangling mass is a per-iteration scalar: the transition frame
+      // holds the real edges only, not a row per (dangling node, node).
+      assert(Graph.pagerankTransitions(es).count() == es.count())
+    }
   }
 
   test("a pagerank input over the driver budget takes the distributed loop") {
