@@ -105,8 +105,12 @@ object Graph {
     val edges = edgesIn.localCheckpoint()
     val nodes = nodesIn.select(col("node")).distinct().localCheckpoint()
     val n = nodes.count().toDouble
-    // Transition frame, one row per edge — scanned once per iteration.
-    val p = pagerankTransitions(edges).localCheckpoint()
+    val outw = edges.groupBy(col("src")).agg(sum(col("n")).as("w"))
+    // Row-stochastic transition frame over the real edges, one row per
+    // edge — scanned once per iteration.
+    val p = edges.join(outw, "src")
+      .select(col("src"), col("dst"), (col("n") / col("w")).as("p"))
+      .localCheckpoint()
     // A dangling node spreads its rank uniformly over all nodes; that
     // is one scalar per iteration (their rank sum / n), not D·N edges.
     val dangling = nodes
@@ -132,14 +136,6 @@ object Graph {
       i += 1
     }
     ranks
-  }
-
-  /** [[pagerankDistributed]]'s row-stochastic transition frame over the
-    * real edges: (src, dst, p = n / src's out-weight), one row per edge.
-    */
-  private[graft] def pagerankTransitions(edges: DataFrame): DataFrame = {
-    val outw = edges.groupBy(col("src")).agg(sum(col("n")).as("w"))
-    edges.join(outw, "src").select(col("src"), col("dst"), (col("n") / col("w")).as("p"))
   }
 
   /** The driver finish of [[pagerank]] over the collected distinct

@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.engine.Graph
 
 /** Semantics the mirrored PageRank/triangle oracles cannot independently
@@ -60,10 +63,36 @@ class GraphSpec extends AnyFunSuite {
       assert(driver.orderBy("node").collect().toSeq == dist.orderBy("node").collect().toSeq)
       val mass = dist.select(sum(col("r"))).as[Double].head()
       assert(math.abs(mass - 1.0) < 1e-9, s"rank mass $mass != 1")
-      // Dangling mass is a per-iteration scalar: the transition frame
-      // holds the real edges only, not a row per (dangling node, node).
-      assert(Graph.pagerankTransitions(es).count() == es.count())
     }
+  }
+
+  test("pagerankDistributed's dangling mass stays linear: no operator outputs more than E + N rows") {
+    // Redistributing the dangling mass as edges from each dangling node
+    // to every node makes D·N rows — 32 here, against E + N = 13 — in
+    // the transition frame and in every iteration's join with it.
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Graph.pagerankDistributed(halfDanglingEdges, halfDanglingNodes)
+      assert(org.apache.spark.GraftListenerBusAccess.waitUntilEmpty(spark.sparkContext, 30000L))
+    } finally spark.listenerManager.unregister(listener)
+    val plans = { import scala.jdk.CollectionConverters._; seen.asScala.toSeq }
+    // The edge and node checkpoints, the transition frame and each
+    // iteration's rank materialization at least.
+    assert(plans.size > Graph.PrIters, s"${plans.size} executions seen")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val rows = plans.flatMap(p => helper.collect(p) {
+      case op if op.metrics.contains("numOutputRows") =>
+        (op.nodeName, op.metrics("numOutputRows").value)
+    })
+    val limit = 5 + 8
+    assert(rows.nonEmpty && rows.forall(_._2 <= limit),
+      s"operators over E + N = $limit rows: ${rows.filter(_._2 > limit).distinct}")
   }
 
   test("a pagerank input over the driver budget takes the distributed loop") {

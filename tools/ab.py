@@ -3,20 +3,22 @@
 
 Usage (from the root of a graft checkout):
   python3 tools/ab.py <parent-rev> --workload W [--pairs N] [--seeds a-b]
-                      [--seconds 10] [--trace 0] [--scratch DIR]
+                      [--trace 0] [--scratch DIR]
 
 The parent tree is `git archive <parent-rev>` unpacked under --scratch (kept
 between calls, so its benchmark build is reused). Each pair runs
 `perfbench/run.py --workload W --seed S` once from each tree with the same
-seed, the side that goes first alternating from pair to pair (the parent
-first in the first pair), so slow drift of the box falls on both sides.
+seed and run.py's own run length, the side that goes first alternating from
+pair to pair (the parent first in the first pair), so slow drift of the box
+falls on both sides.
 
 For every metric the result lines carry, it prints each side's median and
 quartiles, the pairs the change won, and, for the end-to-end metrics
 BENCHMARK.json bounds, a verdict:
   worse      the change's median is worse than the parent's by more than the bound
-  unresolved not worse, but a side's quartile spread (q3 - q1) / median exceeds the bound
-  within     neither
+  unresolved not worse, but a side's quartile spread (q3 - q1) / median exceeds the
+             bound, unless every change run beats every parent run
+  within     otherwise
 and whether a gain would hold: at least ten pairs, the change wins nine
 tenths of them (ties count for neither side), and its median beats the
 parent's by more than the parent's q3 - q1.
@@ -41,13 +43,11 @@ def order(pair):
 
 
 def seeds_arg(text, pairs):
-    """The pairs' seeds: `a-b` (inclusive) or `a,b,c`; by default 1..pairs."""
+    """The pairs' seeds: `a-b` (inclusive); by default 1..pairs."""
     if not text:
         return list(range(1, pairs + 1))
-    if "-" in text:
-        a, b = text.split("-", 1)
-        return list(range(int(a), int(b) + 1))
-    return [int(s) for s in text.split(",")]
+    a, b = text.split("-", 1)
+    return list(range(int(a), int(b) + 1))
 
 
 def quartiles(xs):
@@ -77,6 +77,9 @@ def verdict(parent, change, better, bound):
     cm, cq1, cq3 = quartiles(change)
     if worse_by(pm, cm, better) > bound:
         return "worse"
+    separated = max(change) < min(parent) if better == "lower" else min(change) > max(parent)
+    if separated:
+        return "within"
     spread = max((q3 - q1) / abs(m) if m else float("inf")
                  for m, q1, q3 in ((pm, pq1, pq3), (cm, cq1, cq3)))
     return "unresolved" if spread > bound else "within"
@@ -114,10 +117,10 @@ def parent_tree(rev, scratch):
     return tree
 
 
-def run_once(tree, workload, seed, seconds, trace):
+def run_once(tree, workload, seed, trace):
     """One perfbench run from `tree`: (result dict or None, exit code)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
+                        "--seed", str(seed), "--trace", str(trace)],
                        cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -164,8 +167,7 @@ def main():
     ap.add_argument("parent")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seeds", help="a-b or a,b,c; the pair count follows it")
-    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--seeds", help="a-b; the pair count follows it")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "graft-ab"))
     a = ap.parse_args()
@@ -175,7 +177,7 @@ def main():
     for i, seed in enumerate(seeds_arg(a.seeds, a.pairs)):
         pair = {"seed": seed, "first": order(i)[0]}
         for side in order(i):
-            res, code = run_once(trees[side], a.workload, seed, a.seconds, a.trace)
+            res, code = run_once(trees[side], a.workload, seed, a.trace)
             if res is None or not res.get("correct") or res.get("failed") or code != 0:
                 bad.append(f"seed {seed} {side}: " + ("no result" if res is None else
                            f"correct={res.get('correct')} failed={res.get('failed')} exit={code}"))
@@ -185,7 +187,7 @@ def main():
         if pair["parent"] and pair["change"]:
             runs.append(pair)
     print(f"\n{a.workload}: {len(runs)} pairs, parent {a.parent} ({tree}) vs {ROOT}, "
-          f"{a.seconds:g} s, trace {a.trace}")
+          f"trace {a.trace}")
     worse = report(runs, load_contract(ROOT)) if runs else []
     for b in bad:
         print("FAILED " + b)

@@ -20,7 +20,6 @@ class Order(unittest.TestCase):
 
     def test_seed_ranges(self):
         self.assertEqual(ab.seeds_arg("71-74", 10), [71, 72, 73, 74])
-        self.assertEqual(ab.seeds_arg("5,9", 10), [5, 9])
         self.assertEqual(ab.seeds_arg(None, 3), [1, 2, 3])
 
 
@@ -73,6 +72,15 @@ class Verdict(unittest.TestCase):
     def test_wide_spread_is_unresolved(self):
         parent = [5.0, 15.0, 5.0, 15.0]
         self.assertEqual(ab.verdict(parent, [10.0, 10.0, 10.0, 10.0], "lower", 0.25),
+                         "unresolved")
+
+    def test_separated_runs_are_within_however_wide_the_spread(self):
+        parent = [5.0, 15.0, 5.0, 15.0]
+        self.assertEqual(ab.verdict(parent, [4.0, 1.0, 4.5, 2.0], "lower", 0.25), "within")
+        self.assertEqual(ab.verdict(parent, [16.0, 30.0, 17.0, 40.0], "higher", 0.25),
+                         "within")
+        # One change run inside the parent's range: the runs overlap.
+        self.assertEqual(ab.verdict(parent, [4.0, 1.0, 6.0, 2.0], "lower", 0.25),
                          "unresolved")
 
     def test_report_names_the_worse_metric(self):
