@@ -172,21 +172,6 @@ object ReplaySource {
     segs
   }
 
-  /** MIGRATION for dirs an operator KNOWS were written by an escaping
-    * (v2) writer that predates the marker: stamps [[FormatMarker]] so
-    * readers accept them again. This is an explicit attestation — the
-    * guard exists precisely because v1-vs-v2 is not content-detectable,
-    * so nothing stamps automatically; calling this on actual v1 data
-    * recreates the silent-reinterpretation hazard the marker prevents.
-    */
-  def stampFormatV2(dir: String, conf: Configuration = new Configuration()): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p), s"replay dir $dir does not exist")
-    val m = new Path(p, FormatMarker)
-    if (!fs.exists(m)) fs.create(m, true).close()
-  }
-
   /** Segment listing WITHOUT the format-version check — `stage` needs it
     * to inspect a dir before deciding whether stamping [[FormatMarker]]
     * is legitimate (stamping over unmarked foreign segments would bless

@@ -26,8 +26,8 @@ import graft.streaming.Streams.Event
   * — a lost row (state under-recovered) and a duplicated row (sink
   * re-committed) both fail. All under the state configuration of
   * [[Streams.sessionConf]], which every streaming main runs: the RocksDB
-  * provider with Spark's default snapshot checkpointing.
-  * StateProviderParitySpec covers changelog checkpointing.
+  * provider with changelog checkpointing. CheckpointCompatSpec covers
+  * snapshot checkpointing.
   */
 class CrashRecoverySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -58,11 +58,11 @@ class CrashRecoverySpec extends AnyFunSuite {
     val latest = files.maxBy(_.getName.toLong)
     val id = latest.getName.toLong
     assert(latest.delete(), s"could not delete $latest")
-    // The local checkpoint FS is Hadoop's ChecksumFileSystem: the marker
-    // has a `.N.crc` sibling, and a stale one makes the recovered
-    // query's atomic re-write of commits/N fail with
-    // FileAlreadyExistsException ("multiple streaming queries") — a real
-    // crash loses both files together.
+    // A marker written through Hadoop's ChecksumFileSystem has a `.N.crc`
+    // sibling, and a stale one makes the recovered query's re-write of
+    // commits/N fail with FileAlreadyExistsException ("multiple
+    // streaming queries") — a real crash loses both files together.
+    // Markers written through CheckpointFiles have none.
     val crc = new java.io.File(dir, s".$id.crc")
     if (crc.exists()) assert(crc.delete(), s"could not delete $crc")
     id

@@ -92,7 +92,10 @@ class SourceSinkSpec extends AnyFunSuite {
     assert(seen.asScala.toSeq.map(_._2).sum == 0L, s"restart re-delivered: ${seen.asScala.toSeq}")
   }
 
-  test("lastMetrics exposes throughput and dedup state-store size") {
+  /** A dedup stream over 300 fixture events staged as one file, started
+    * on the session's current state configuration.
+    */
+  private def metricsQuery(name: String): (String, org.apache.spark.sql.streaming.StreamingQuery) = {
     val dir = java.nio.file.Files.createTempDirectory("graft-met").toString
     Tables.events(spark, TestSpark.sfDir).limit(300).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/in")
@@ -101,7 +104,11 @@ class SourceSinkSpec extends AnyFunSuite {
       .parquet(s"$dir/in")
     val deduped = Streams.dedupWithinWatermark(streamed, delay = "1 hour",
       idCols = Seq("user_id", "event_type"))
-    val q = Streams.start(deduped, Streams.MemoryStreamSink("met_sink"))
+    (dir, Streams.start(deduped, Streams.MemoryStreamSink(name)))
+  }
+
+  test("lastMetrics exposes throughput and dedup state-store size") {
+    val (dir, q) = metricsQuery("met_sink")
     try {
       q.processAllAvailable()
       val m = Streams.lastMetrics(q).getOrElse(
@@ -117,17 +124,20 @@ class SourceSinkSpec extends AnyFunSuite {
       assert(m.batchDurationMs >= 0 && m.stateMemoryBytes > 0)
       assert(all.map(_.droppedByWatermark).sum == 0L, s"in-order input dropped rows: $all")
       // The batch phases and the RocksDB store's commit parts are named:
-      // a data batch writes its offsets and runs its plan, and its store
-      // commit uploads a snapshot zip (changelog checkpointing is off), so
-      // a misspelt phase or custom-metric name reads 0 and fails here.
+      // a data batch writes its offsets and runs its plan, and under
+      // sessionConf its store commit writes a changelog file, so a
+      // misspelt phase or custom-metric name reads 0 and fails here. The
+      // offsets write can take under a millisecond, so its phase is
+      // checked by key rather than by value.
       val data = all.filter(_.numInputRows > 0)
-      assert(data.nonEmpty && data.forall(b => b.walCommitMs > 0 && b.addBatchMs > 0),
-        s"batch phases: $data")
+      assert(data.nonEmpty && data.forall(_.addBatchMs > 0), s"batch phases: $data")
+      assert(q.recentProgress.filter(_.numInputRows > 0)
+        .forall(_.durationMs.containsKey("walCommit")), s"batch phases: $data")
       assert(data.forall(b => b.triggerExecutionMs >= b.addBatchMs), s"batch phases: $data")
       assert(data.forall(b => b.queryPlanningMs > 0 && b.latestOffsetMs > 0),
         s"batch phases: $data")
-      assert(data.forall(b => b.stateCommitMs > 0 && b.rocksdbCommitFileSyncMs > 0 &&
-        b.rocksdbSaveZipFilesMs > 0), s"state commit: $data")
+      assert(data.forall(b => b.stateCommitMs > 0 && b.rocksdbChangelogCommitMs > 0),
+        s"state commit: $data")
       // A later file carries a row ten years behind the watermark: the
       // dedup operator drops it and the metric counts it.
       Tables.events(spark, TestSpark.sfDir).limit(1)
@@ -137,6 +147,23 @@ class SourceSinkSpec extends AnyFunSuite {
       assert(Streams.recentMetrics(q).map(_.droppedByWatermark).sum >= 1L,
         s"late row not counted: ${Streams.recentMetrics(q)}")
     } finally q.stop()
+  }
+
+  test("lastMetrics names the RocksDB snapshot upload parts when changelog checkpointing is off") {
+    val key = Streams.ChangelogCheckpointingKey
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val (_, q) = metricsQuery("met_snapshot_sink")
+      try {
+        q.processAllAvailable()
+        // Each data batch's store commit uploads a snapshot: its file sync
+        // and zip upload parts read above 0 unless their names are wrong.
+        val data = Streams.recentMetrics(q).filter(_.numInputRows > 0)
+        assert(data.nonEmpty && data.forall(b => b.stateCommitMs > 0 &&
+          b.rocksdbCommitFileSyncMs > 0 && b.rocksdbSaveZipFilesMs > 0), s"state commit: $data")
+      } finally q.stop()
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("events() builder dispatches on source config") {

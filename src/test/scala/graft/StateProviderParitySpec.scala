@@ -14,10 +14,11 @@ import graft.streaming.Streams.Event
   *    watermark-stateful operators that accept it (dedup-within-watermark,
   *    windowed aggregation) — provider choice is an execution detail, not
   *    a semantics knob;
-  *  - RocksDB with CHANGELOG CHECKPOINTING — the at-scale configuration,
-  *    where per-batch uploads ship the delta instead of full SST sets —
-  *    recovers dedup state across a stop/restart cycle on the same
-  *    checkpoint (suppression continues, nothing re-emits).
+  *  - RocksDB with CHANGELOG CHECKPOINTING — the configuration
+  *    `Streams.sessionConf` sets, where per-batch commits write the delta
+  *    instead of full SST sets — recovers dedup state across a
+  *    stop/restart cycle on the same checkpoint (suppression continues,
+  *    nothing re-emits).
   *
   * A provider is fixed for the LIFETIME of a checkpoint (state files are
   * provider-specific), so each query here gets a fresh checkpoint; what
