@@ -1668,10 +1668,12 @@ object Streams {
     * `commitOffsets` write the offsets and commits logs), and the state
     * stores' commit — `commitTimeMs` and its RocksDB parts (memtable
     * flush, compaction, native checkpoint, file sync, snapshot zip
-    * upload, changelog commit). The commit figures are summed over the
-    * state operators and their store instances, which commit in
-    * parallel tasks, so they can exceed the batch's wall time. A phase
-    * or a part the batch did not report reads 0.
+    * upload, changelog commit), plus `rocksdbLoadMs`, the time the
+    * RocksDB stores took to load their version at the batch's start.
+    * The store figures are summed over the state operators and their
+    * store instances, which run in parallel tasks, so they can exceed
+    * the batch's wall time. A phase or a part the batch did not report
+    * reads 0.
     */
   final case class QueryMetrics(
       batchId: Long,
@@ -1697,7 +1699,8 @@ object Streams {
       rocksdbCommitCheckpointMs: Long,
       rocksdbCommitFileSyncMs: Long,
       rocksdbSaveZipFilesMs: Long,
-      rocksdbChangelogCommitMs: Long)
+      rocksdbChangelogCommitMs: Long,
+      rocksdbLoadMs: Long)
 
   private[graft] def toMetrics(p: org.apache.spark.sql.streaming.StreamingQueryProgress): QueryMetrics = {
     val ops = p.stateOperators.toIndexedSeq
@@ -1728,7 +1731,8 @@ object Streams {
       rocksdbCommitCheckpointMs = custom("rocksdbCommitCheckpointLatency"),
       rocksdbCommitFileSyncMs = custom("rocksdbCommitFileSyncLatencyMs"),
       rocksdbSaveZipFilesMs = custom("rocksdbSaveZipFilesLatencyMs"),
-      rocksdbChangelogCommitMs = custom("rocksdbChangeLogWriterCommitLatencyMs"))
+      rocksdbChangelogCommitMs = custom("rocksdbChangeLogWriterCommitLatencyMs"),
+      rocksdbLoadMs = custom("rocksdbLoadLatencyMs"))
   }
 
   /** Latest completed micro-batch's metrics (None before the first batch

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{ReplayMicroBatchStream, ReplayOffset, ReplaySource, Streams}
+import graft.streaming.{ReplayMicroBatchStream, ReplayOffset, ReplayReaderFactory, ReplaySource,
+  ReplayTable, SerializableHadoopConf, Streams}
 
 /** The `graft-replay` DataSourceV2 source (r14 verdict item #5): the one
   * Spark extension surface the engine had not exercised — a REAL streaming
@@ -19,7 +20,10 @@ import graft.streaming.{ReplayMicroBatchStream, ReplayOffset, ReplaySource, Stre
   *  - lost-commit crash replay through a file sink stays exactly-once
   *    (the CrashRecoverySpec seam, now through OUR source's offset log);
   *  - the append-only log contract is enforced (mutated log throws);
-  *  - offset JSON round-trips (what the checkpoint offsets/ dir stores).
+  *  - offset JSON round-trips (what the checkpoint offsets/ dir stores);
+  *  - the driver's Hadoop conf is copied at scan build and reaches the
+  *    readers through one broadcast per query, so a shipped reader
+  *    factory stays under 4 KiB.
   */
 class ReplaySourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -234,34 +238,79 @@ class ReplaySourceSpec extends AnyFunSuite {
     assert(r4.getString(3) == "\\N" && r4.isNullAt(5))
   }
 
+  private def replayScan(dir: String) = {
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir))
+    new ReplayTable(opts).newScanBuilder(opts).build()
+  }
+
   test("the driver's Hadoop conf (custom FS keys included) survives serialization to the reader") {
-    import graft.streaming.{ReplayReaderFactory, ReplayTable, SerializableHadoopConf}
     val dir = tmp("graft-replay-conf")
     ReplaySource.stage(fixture.limit(100), dir, segments = 1)
     spark.sparkContext.hadoopConfiguration.set("graft.replay.probe", "r16")
     try {
-      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("path", dir))
-      val factory = new ReplayTable(opts).newScanBuilder(opts).build()
-        .toBatch.createReaderFactory().asInstanceOf[ReplayReaderFactory]
-      // Round-trip through Java serialization — exactly what Spark does to
-      // ship the factory to an executor; a reader rebuilding
+      val factory = replayScan(dir).toBatch.createReaderFactory()
+        .asInstanceOf[ReplayReaderFactory]
+      // Ship the factory the way Spark does; a reader rebuilding
       // `new Configuration()` would lose the key (r15 verdict item #3).
-      val bytes = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bytes)
-      oos.writeObject(factory); oos.close()
-      val shipped = new java.io.ObjectInputStream(
-        new java.io.ByteArrayInputStream(bytes.toByteArray))
-        .readObject().asInstanceOf[ReplayReaderFactory]
-      assert(shipped.conf.value.get("graft.replay.probe") == "r16")
+      val shipped = TestSpark.javaRoundTrip(factory)
+      assert(shipped.conf.value.value.get("graft.replay.probe") == "r16")
+      // The broadcast value itself goes through the same Java codec.
+      assert(TestSpark.javaRoundTrip(factory.conf.value).value
+        .get("graft.replay.probe") == "r16")
       // And the shipped conf actually opens files: read one row through it.
       val part = graft.streaming.ReplayInputPartition(
-        ReplaySource.listSegments(dir, shipped.conf.value).head.path)
+        ReplaySource.listSegments(dir, shipped.conf.value.value).head.path)
       val reader = shipped.createReader(part)
       try assert(reader.next()) finally reader.close()
       val conf2 = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
       assert(conf2.value.get("graft.replay.probe") == "r16")
     } finally spark.sparkContext.hadoopConfiguration.unset("graft.replay.probe")
+  }
+
+  test("a shipped reader factory carries a broadcast handle, not the Hadoop conf") {
+    val dir = tmp("graft-replay-factory-size")
+    ReplaySource.stage(fixture.limit(100), dir, segments = 1)
+    val scan = replayScan(dir)
+    val stream = scan.toMicroBatchStream(tmp("graft-replay-factory-ckpt"))
+    try {
+      // The whole conf serializes to ~110 KB; a task must not carry it.
+      Seq("batch" -> scan.toBatch.createReaderFactory(),
+          "micro-batch" -> stream.createReaderFactory()).foreach { case (face, f) =>
+        val n = TestSpark.javaBytes(f).length
+        assert(n < 4096, s"$face reader factory serializes to $n bytes")
+      }
+    } finally stream.stop()
+  }
+
+  test("a micro-batch stream broadcasts its conf once per query and stop() destroys it") {
+    val dir = tmp("graft-replay-broadcast")
+    ReplaySource.stage(fixture.limit(100), dir, segments = 1)
+    val stream = replayScan(dir).toMicroBatchStream(tmp("graft-replay-broadcast-ckpt"))
+    val f1 = stream.createReaderFactory().asInstanceOf[ReplayReaderFactory]
+    val f2 = stream.createReaderFactory().asInstanceOf[ReplayReaderFactory]
+    assert(f1.conf.id == f2.conf.id)
+    assert(f1.conf.value.value.size() > 0)
+    stream.stop()
+    intercept[org.apache.spark.SparkException](f1.conf.value)
+  }
+
+  test("a Hadoop conf key set after the scan is built does not reach the reader") {
+    val dir = tmp("graft-replay-late-key")
+    ReplaySource.stage(fixture.limit(100), dir, segments = 1)
+    val scan = replayScan(dir)
+    spark.sparkContext.hadoopConfiguration.set("graft.replay.late", "set-after-build")
+    val stream = scan.toMicroBatchStream(tmp("graft-replay-late-key-ckpt"))
+    try {
+      // The conf is copied at capture, so neither face's factory sees it.
+      Seq(scan.toBatch.createReaderFactory(), stream.createReaderFactory()).foreach { f =>
+        val shipped = TestSpark.javaRoundTrip(f.asInstanceOf[ReplayReaderFactory])
+        assert(shipped.conf.value.value.get("graft.replay.late") == null)
+      }
+    } finally {
+      stream.stop()
+      spark.sparkContext.hadoopConfiguration.unset("graft.replay.late")
+    }
   }
 
   test("CompositeReadLimit unwraps to its most restrictive maxFiles; unhonorable caps throw") {

@@ -138,6 +138,15 @@ class SourceSinkSpec extends AnyFunSuite {
         s"batch phases: $data")
       assert(data.forall(b => b.stateCommitMs > 0 && b.rocksdbChangelogCommitMs > 0),
         s"state commit: $data")
+      // Every data batch loads its stores' version; a load can take under
+      // a millisecond, so the key is checked on each state operator and
+      // the field against its sum.
+      val dataProgress = q.recentProgress.filter(_.numInputRows > 0).toSeq
+      assert(dataProgress.forall(_.stateOperators.forall(
+        _.customMetrics.containsKey("rocksdbLoadLatencyMs"))), s"store load: $data")
+      assert(dataProgress.map(p => Streams.toMetrics(p).rocksdbLoadMs) ==
+        dataProgress.map(_.stateOperators.map(
+          _.customMetrics.get("rocksdbLoadLatencyMs").longValue).sum), s"store load: $data")
       // A later file carries a row ten years behind the watermark: the
       // dedup operator drops it and the metric counts it.
       Tables.events(spark, TestSpark.sfDir).limit(1)

@@ -17,4 +17,19 @@ object TestSpark {
   }
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Java serialization — what Spark does to a reader factory to ship it
+    * to an executor inside a task.
+    */
+  def javaBytes(o: AnyRef): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(o)
+    out.close()
+    bytes.toByteArray
+  }
+
+  def javaRoundTrip[T <: AnyRef](o: T): T =
+    new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(javaBytes(o)))
+      .readObject().asInstanceOf[T]
 }

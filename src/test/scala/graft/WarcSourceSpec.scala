@@ -84,6 +84,21 @@ class WarcSourceSpec extends AnyFunSuite {
     assert(counts("warcinfo") == expectedInfo.toLong)
   }
 
+  test("a shipped reader factory carries a broadcast handle, not the Hadoop conf, and reads") {
+    import graft.sources.{WarcInputPartition, WarcTable}
+    val dir = java.nio.file.Files.createTempDirectory("graft-warcship").toFile
+    writeShard(dir, 0, Seq(2L, 6L))
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", dir.toString))
+    val factory = new WarcTable(opts).newScanBuilder(opts).build().toBatch.createReaderFactory()
+    // The whole conf serializes to ~110 KB; a task must not carry it.
+    val n = TestSpark.javaBytes(factory).length
+    assert(n < 4096, s"reader factory serializes to $n bytes")
+    val reader = TestSpark.javaRoundTrip(factory).createReader(
+      WarcInputPartition(new java.io.File(dir, "shard-000.warc.gz").toURI.toString))
+    try assert(reader.next()) finally reader.close()
+  }
+
   test("a corrupt shard fails the read loudly (tables never drop rows)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-warcbad").toFile
     writeShard(dir, 0, Seq(5L))

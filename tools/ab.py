@@ -2,7 +2,7 @@
 """Same-box A/B of the benchmark: a parent revision against this checkout.
 
 Usage (from the root of a graft checkout):
-  python3 tools/ab.py <parent-rev> --workload W [--pairs N] [--seeds a-b]
+  python3 tools/ab.py <parent-rev> --workload W|all [--pairs N] [--seeds a-b]
                       [--trace 0] [--scratch DIR]
 
 The parent tree is `git archive <parent-rev>` unpacked under --scratch (kept
@@ -10,7 +10,8 @@ between calls, so its benchmark build is reused). Each pair runs
 `perfbench/run.py --workload W --seed S` once from each tree with the same
 seed and run.py's own run length, the side that goes first alternating from
 pair to pair (the parent first in the first pair), so slow drift of the box
-falls on both sides.
+falls on both sides. `--workload all` runs the pairs for every workload
+BENCHMARK.json declares, one after another, and prints one report each.
 
 For every metric the result lines carry, it prints each side's median and
 quartiles, the pairs the change won, and, for the end-to-end metrics
@@ -23,8 +24,9 @@ and whether a gain would hold: at least ten pairs, the change wins nine
 tenths of them (ties count for neither side), and its median beats the
 parent's by more than the parent's q3 - q1.
 
-Exit status: 0 when every run was correct, 1 when a run was incorrect, failed
-or wrote no result, or when an end-to-end metric is worse beyond its bound.
+Exit status: 0 when every run was correct, 1 when, on any workload, a run was
+incorrect, failed or wrote no result, or an end-to-end metric is worse beyond
+its bound.
 """
 import argparse
 import json
@@ -104,6 +106,24 @@ def load_contract(root):
     return out
 
 
+def workloads(name, root):
+    """The workloads to run: every one BENCHMARK.json declares for `all`, else `name`."""
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        declared = [w["name"] for w in json.load(f)["workloads"]]
+    if name == "all":
+        return declared
+    if name not in declared:
+        raise SystemExit(f"unknown workload {name}; BENCHMARK.json declares "
+                         + ", ".join(declared))
+    return [name]
+
+
+def exit_status(results):
+    """1 when any workload had a failed run, a metric worse beyond its bound or no
+    complete pair; else 0. `results` holds one dict per workload."""
+    return 1 if any(r["bad"] or r["worse"] or not r["runs"] for r in results) else 0
+
+
 def parent_tree(rev, scratch):
     sha = subprocess.run(["git", "-C", ROOT, "rev-parse", "--verify", rev + "^{commit}"],
                          check=True, capture_output=True, text=True).stdout.strip()
@@ -161,23 +181,13 @@ def report(runs, contract):
     return worse
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__,
-                                 formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("parent")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seeds", help="a-b; the pair count follows it")
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "graft-ab"))
-    a = ap.parse_args()
-    tree = parent_tree(a.parent, a.scratch)
-    trees = {"parent": tree, "change": ROOT}
+def compare(workload, trees, seeds, trace, parent_rev, contract):
+    """Run the alternating pairs of one workload and print its report."""
     runs, bad = [], []
-    for i, seed in enumerate(seeds_arg(a.seeds, a.pairs)):
+    for i, seed in enumerate(seeds):
         pair = {"seed": seed, "first": order(i)[0]}
         for side in order(i):
-            res, code = run_once(trees[side], a.workload, seed, a.trace)
+            res, code = run_once(trees[side], workload, seed, trace)
             if res is None or not res.get("correct") or res.get("failed") or code != 0:
                 bad.append(f"seed {seed} {side}: " + ("no result" if res is None else
                            f"correct={res.get('correct')} failed={res.get('failed')} exit={code}"))
@@ -186,14 +196,37 @@ def main():
               + ("ok" if pair["parent"] and pair["change"] else "missing a result"), flush=True)
         if pair["parent"] and pair["change"]:
             runs.append(pair)
-    print(f"\n{a.workload}: {len(runs)} pairs, parent {a.parent} ({tree}) vs {ROOT}, "
-          f"trace {a.trace}")
-    worse = report(runs, load_contract(ROOT)) if runs else []
+    print(f"\n{workload}: {len(runs)} pairs, parent {parent_rev} ({trees['parent']}) vs "
+          f"{trees['change']}, trace {trace}")
+    worse = report(runs, contract) if runs else []
     for b in bad:
-        print("FAILED " + b)
+        print(f"FAILED {workload} " + b)
     for n in worse:
-        print(f"WORSE {n}: beyond its bound")
-    return 1 if bad or worse or not runs else 0
+        print(f"WORSE {workload} {n}: beyond its bound")
+    print(flush=True)
+    return {"workload": workload, "runs": runs, "bad": bad, "worse": worse}
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__,
+                                 formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("parent")
+    ap.add_argument("--workload", required=True, help="a BENCHMARK.json workload, or all")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seeds", help="a-b; the pair count follows it")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "graft-ab"))
+    a = ap.parse_args()
+    names = workloads(a.workload, ROOT)
+    trees = {"parent": parent_tree(a.parent, a.scratch), "change": ROOT}
+    contract = load_contract(ROOT)
+    seeds = seeds_arg(a.seeds, a.pairs)
+    results = [compare(w, trees, seeds, a.trace, a.parent, contract) for w in names]
+    if len(results) > 1:
+        for r in results:
+            print(f"{r['workload']}: {len(r['runs'])} pairs, {len(r['bad'])} failed runs, "
+                  f"worse: {', '.join(r['worse']) or 'none'}")
+    return exit_status(results)
 
 
 if __name__ == "__main__":

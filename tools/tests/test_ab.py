@@ -1,4 +1,5 @@
-"""Tests of tools/ab.py's pure logic: run order, the wins rule, the bound verdict.
+"""Tests of tools/ab.py's pure logic: run order, the wins rule, the bound verdict,
+and how `--workload all` picks workloads and folds their results.
 
 Run from the root of the checkout:  python3 -m unittest discover -s tools/tests
 """
@@ -93,6 +94,30 @@ class Verdict(unittest.TestCase):
         import io
         with contextlib.redirect_stdout(io.StringIO()):
             self.assertEqual(ab.report(runs, contract), ["pass_s"])
+
+
+class AllWorkloads(unittest.TestCase):
+    def setUp(self):
+        import shutil
+        import tempfile
+        self.root = tempfile.mkdtemp()
+        self.addCleanup(shutil.rmtree, self.root)
+        with open(os.path.join(self.root, "BENCHMARK.json"), "w") as f:
+            f.write('{"workloads": [{"name": "a"}, {"name": "b"}, {"name": "c"}]}')
+
+    def test_all_names_every_declared_workload_in_order(self):
+        self.assertEqual(ab.workloads("all", self.root), ["a", "b", "c"])
+        self.assertEqual(ab.workloads("b", self.root), ["b"])
+        with self.assertRaises(SystemExit):
+            ab.workloads("nope", self.root)
+
+    def test_one_bad_workload_fails_the_whole_run(self):
+        clean = {"workload": "a", "runs": [{}], "bad": [], "worse": []}
+        self.assertEqual(ab.exit_status([clean, dict(clean, workload="b")]), 0)
+        self.assertEqual(ab.exit_status([clean, dict(clean, workload="b", worse=["pass_s"])]), 1)
+        self.assertEqual(ab.exit_status([dict(clean, bad=["seed 1 change: no result"]), clean]),
+                         1)
+        self.assertEqual(ab.exit_status([clean, dict(clean, runs=[])]), 1)
 
 
 if __name__ == "__main__":
